@@ -53,10 +53,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL for EVERY registered query (all of
-    them — 126 at the round-5 tip; the pair of dicts is asserted
-    same-keyed by the test suite, so this prose never carries the
-    load-bearing count):
+    """DuckDB-runnable oracle SQL for EVERY registered query (the pair
+    of dicts is asserted same-keyed by
+    tests/test_queries.py::test_every_query_has_an_oracle):
     relational queries against the parquet views, image/media-kernel
     queries against committed expected-output parquets selected by
     corpus content key (FIXTURES.md §6b)."""

@@ -288,7 +288,8 @@ def main() -> None:
         "probe_post_hoc": probe_post_hoc,
         "quiet": hl_mean <= QUIET_PROBE_SEC,
         "quiet_probe_threshold_sec": QUIET_PROBE_SEC,
-        "headline_quiet": hl_mean <= HEADLINE_PROBE_SEC,
+        # a probe taken after the window cannot certify a headline
+        "headline_quiet": not probe_post_hoc and hl_mean <= HEADLINE_PROBE_SEC,
         "headline_probe_threshold_sec": HEADLINE_PROBE_SEC,
         "preflight_gate": pre_gate if pre_gate > 0 else None,
         "preflight_gate_probe": pre_gate_probe,

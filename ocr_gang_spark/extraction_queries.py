@@ -199,7 +199,7 @@ def confidence_stats_from(media: DataFrame, weights_bc) -> DataFrame:
     shared with the streaming variant (streaming.stream_confidence)."""
     from .kernels.bmp import decode_media_blob
     from .kernels.image_ops import binarize
-    from .kernels.ocr import page_margin_stats
+    from .kernels.ocr import ocr_pages_to_text_margins
     from .synth import inject_scan_noise, is_degraded_ref
 
     def stats(batches):
@@ -217,7 +217,7 @@ def confidence_stats_from(media: DataFrame, weights_bc) -> DataFrame:
                 flags.append(degraded)
             rows = []
             for ref, degraded, (n, mn, sm) in zip(
-                refs, flags, page_margin_stats(pages, w)
+                refs, flags, ocr_pages_to_text_margins(pages, w)[1]
             ):
                 decision = (
                     "review"

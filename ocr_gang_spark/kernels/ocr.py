@@ -1,9 +1,14 @@
-"""Fused OCR kernel: RGB page image -> recognized text string.
+"""Fused OCR kernel: page images -> recognized text + page confidence.
 
 This is the oracle for the whole media-span path: the exact composition
 ``PerformOCR`` runs (reference source/ocr/ocr.c:112-175) — binarize ->
-segment -> matrixify -> classify -> assemble.  The Spark pipeline calls
-:func:`ocr_pages_to_text` on Arrow batches; tests call it doc-by-doc.
+segment -> matrixify -> classify -> assemble.  There is ONE walk,
+:func:`ocr_pages_to_text_margins`: the softmax the reference already
+computes before ``IndexAnswer`` (ocr.c:158) yields the top1-top2
+confidence margin alongside the argmax, so text and page confidence
+come out of the same forward.  The Spark pipeline calls it on Arrow
+batches; :func:`ocr_pages_to_text` and :func:`extract_text` are
+text-only views of it.
 
 Result assembly (``build_ocr_result`` ocr.c:87-110): characters of each
 line concatenated in order, NULL matrices emit ' ', lines joined with a
@@ -17,185 +22,101 @@ from typing import Iterable, List
 
 import numpy as np
 
-from .bmp import decode_bmp
 from .image_ops import binarize, segment_page
-from .nn import OcrWeights, classify, classify_margin_ppm
+from .nn import OcrWeights, classify_margin_ppm
 
 # Content-addressed memoization (semantically transparent: identical
 # input bytes -> identical output by purity of the kernels).  Real
-# corpora repeat glyph shapes heavily, so the executor-local LRU turns
-# the per-glyph NN cost into a dict lookup for repeats; each Spark
-# python worker is single-threaded, so no locking is needed.
-_CLS_CACHE_MAX = 65536
+# corpora repeat glyph shapes heavily, so the executor-local LRUs turn
+# the per-glyph matrixify and NN cost into dict lookups for repeats;
+# each Spark python worker is single-threaded, so no locking is needed.
+# Both are trimmed after every call, so neither outgrows its bound
+# between calls.
+_GLYPH_MEMO_MAX = 65536
 _MAT_CACHE_MAX = 16384
 _MAT_CACHE: OrderedDict = OrderedDict()  # (crop shape, bytes) -> matrix|None
 
 
-def _cls_cache(weights: OcrWeights) -> OrderedDict:
-    # cache rides on the weights object (one broadcast value per worker),
-    # so different weights can never cross-contaminate
-    cache = getattr(weights, "_cls_cache", None)
-    if cache is None:
-        cache = OrderedDict()
-        object.__setattr__(weights, "_cls_cache", cache)
-    return cache
+def _trim(cache: OrderedDict, bound: int) -> None:
+    while len(cache) > bound:
+        cache.popitem(last=False)
 
 
-def _dedup_layouts(pages, cache, binarize_input: bool = True):
-    """The ONE segment/dedup walk every OCR entry point shares
-    (round-4 review: three hand-synchronized copies guaranteed the
-    batch/margin paths' identity only by eyeballing): binarize ->
-    segment (content-addressed matrix memo) -> per-glyph classification
-    cache probe -> novel-matrix dedup.
+def _glyph_memo(weights: OcrWeights) -> OrderedDict:
+    """matrix bytes -> (char, margin_ppm).  The memo rides on the
+    weights object (one broadcast value per worker), so different
+    weights can never cross-contaminate."""
+    memo = getattr(weights, "_glyph_memo", None)
+    if memo is None:
+        memo = OrderedDict()
+        object.__setattr__(weights, "_glyph_memo", memo)
+    return memo
+
+
+def _dedup_layouts(pages, memo):
+    """binarize -> segment (content-addressed matrix memo) -> glyph memo
+    probe -> novel-matrix dedup.  A 3-D ``(h, w, 3)`` page is RGB and is
+    binarized; a 2-D ``(h, w)`` page is taken as already binarized.
 
     Returns (layouts, novel, novel_keys).  Layout slots per line:
-    ``None`` (space) | a cached value (whatever the caller stores —
-    str for the text path, (char, ppm) for the fused path; never int)
-    | an int index into ``novel``.  Callers classify ``novel`` once,
-    update ``cache`` keyed by ``novel_keys``, and resolve int slots."""
+    ``None`` (space) | a memoized ``(char, ppm)`` pair | an int index
+    into ``novel``, which the caller classifies once."""
     layouts: List[list] = []
     novel: List[np.ndarray] = []
     novel_keys: List[bytes] = []
     pending: dict = {}
-    while len(_MAT_CACHE) > _MAT_CACHE_MAX:
-        _MAT_CACHE.popitem(last=False)
-    for page in pages:
-        bw = binarize(page) if binarize_input else page
-        layout = []
-        for line in segment_page(bw, matrix_cache=_MAT_CACHE):
-            slots = []
-            for mat in line:
-                if mat is None:
-                    slots.append(None)
-                    continue
-                key = mat.tobytes()
-                hit = cache.get(key)
-                if hit is not None:
-                    cache.move_to_end(key)
-                    slots.append(hit)
-                    continue
-                idx = pending.get(key)
-                if idx is None:
-                    idx = len(novel)
-                    pending[key] = idx
-                    novel.append(mat)
-                    novel_keys.append(key)
-                slots.append(idx)
-            layout.append(slots)
-        layouts.append(layout)
+    try:
+        for page in pages:
+            bw = binarize(page) if page.ndim == 3 else page
+            layout = []
+            for line in segment_page(bw, matrix_cache=_MAT_CACHE):
+                slots = []
+                for mat in line:
+                    if mat is None:
+                        slots.append(None)
+                        continue
+                    key = mat.tobytes()
+                    hit = memo.get(key)
+                    if hit is not None:
+                        memo.move_to_end(key)
+                        slots.append(hit)
+                        continue
+                    idx = pending.get(key)
+                    if idx is None:
+                        idx = len(novel)
+                        pending[key] = idx
+                        novel.append(mat)
+                        novel_keys.append(key)
+                    slots.append(idx)
+                layout.append(slots)
+            layouts.append(layout)
+    finally:
+        _trim(_MAT_CACHE, _MAT_CACHE_MAX)
     return layouts, novel, novel_keys
 
 
-def extract_text(rgb: np.ndarray, weights: OcrWeights) -> str:
-    """OCR one page image ((h, w, 3) uint8 RGB) into its text string."""
-    return ocr_pages_to_text([rgb], weights)[0]
+def ocr_pages_to_text_margins(pages: Iterable[np.ndarray], weights: OcrWeights):
+    """Batched OCR with per-page confidence: returns
+    ``(texts, [(n_glyphs, min_margin_ppm | None, sum_margin_ppm)])``.
 
+    Pages are ``(h, w, 3)`` RGB or ``(h, w)`` already-binarized arrays.
+    Segmentation runs per page; classification is deduplicated by
+    matrix content against the cross-batch memo and batched across
+    every novel glyph of the batch (one chunked conv + two matmuls
+    total), so repeats cost a dict lookup.  Margins are aggregated per
+    glyph INSTANCE (a repeated shape counts each occurrence); a page
+    with zero glyphs has stats ``(0, None, 0)``."""
+    memo = _glyph_memo(weights)
+    layouts, novel, novel_keys = _dedup_layouts(pages, memo)
 
-def extract_text_from_bmp(data: bytes, weights: OcrWeights) -> str:
-    return ocr_pages_to_text([decode_bmp(data)], weights)[0]
-
-
-def ocr_pages_to_text(pages: Iterable[np.ndarray], weights: OcrWeights) -> List[str]:
-    """Batched OCR: segmentation per page; classification deduplicated by
-    matrix content and batched across every novel glyph of the batch
-    (one chunked conv + two matmuls total).
-
-    Per-page segmentation is cheap vectorized NumPy; dedup + batching
-    keeps the Python-side and NN work per glyph ~zero for repeats.
-    """
-    cache = _cls_cache(weights)
-    layouts, novel, novel_keys = _dedup_layouts(pages, cache)
-
+    resolved: list = []
     if novel:
         # uint8 {0,1} stack: the binary conv LUT needs no float64 input,
         # and an (N,28,28) float64 stack is 8x the memory traffic
-        chars = classify(np.stack(novel), weights)
-        for key, ch in zip(novel_keys, chars):
-            cache[key] = str(ch)
-        while len(cache) > _CLS_CACHE_MAX:
-            cache.popitem(last=False)
-    else:
-        chars = np.empty(0, dtype="<U1")
-
-    out = []
-    for layout in layouts:
-        text_lines = [
-            "".join(
-                " " if s is None else (s if isinstance(s, str) else str(chars[s]))
-                for s in slots
-            )
-            for slots in layout
-        ]
-        out.append("\n".join(text_lines))
-    return out
-
-
-def page_margin_stats(bw_pages: Iterable[np.ndarray], weights: OcrWeights):
-    """Per-page confidence aggregates for rejection routing: segment
-    each (already binarized) page, classify every glyph instance with
-    classify_margin_ppm, and reduce to
-    ``(n_glyphs, min_margin_ppm | None, sum_margin_ppm)``.
-
-    Margins are aggregated per glyph INSTANCE (a repeated shape counts
-    each occurrence), but the NN forward runs once per DISTINCT matrix
-    in the batch — same dedup-and-batch shape as ocr_pages_to_text,
-    kept separate so the exact-match text path stays untouched.  Pages
-    with zero glyphs return (0, None, 0)."""
-    # same shared walk, with a throwaway cache (this path memoizes
-    # nothing across calls by design) and pre-binarized input; spaces
-    # (None slots) are dropped and lines flattened per page
-    nested, novel, _keys = _dedup_layouts(
-        bw_pages, OrderedDict(), binarize_input=False
-    )
-    layouts = [
-        [s for line in layout for s in line if s is not None]
-        for layout in nested
-    ]
-    if novel:
-        _, ppm = classify_margin_ppm(np.stack(novel), weights)
-    else:
-        ppm = np.empty(0, dtype=np.int64)
-    out = []
-    for slots in layouts:
-        if not slots:
-            out.append((0, None, 0))
-            continue
-        vals = ppm[slots]
-        out.append((len(slots), int(vals.min()), int(vals.sum())))
-    return out
-
-
-def _cls_margin_cache(weights: OcrWeights) -> OrderedDict:
-    cache = getattr(weights, "_cls_margin_cache", None)
-    if cache is None:
-        cache = OrderedDict()
-        object.__setattr__(weights, "_cls_margin_cache", cache)
-    return cache
-
-
-def ocr_pages_to_text_margins(pages, weights: OcrWeights):
-    """Fused single-pass OCR + confidence: returns
-    ``(texts, [(n_glyphs, min_margin_ppm | None, sum_margin_ppm)])``
-    with texts IDENTICAL to ocr_pages_to_text (same segmentation, same
-    argmax — classify_margin_ppm shares the forward).
-
-    This is the production margin path: the separate
-    page_margin_stats pass re-runs decode+segment+forward, which at
-    10^12 blobs doubles the NN cost; here margins ride the extraction
-    forward for free.  Separate memo cache (values are (char, ppm)
-    pairs) so the exact-match text path's cache shape is untouched."""
-    cache = _cls_margin_cache(weights)
-    layouts, novel, novel_keys = _dedup_layouts(pages, cache)
-
-    if novel:
         chars, ppms = classify_margin_ppm(np.stack(novel), weights)
-        for key, ch, ppm in zip(novel_keys, chars, ppms):
-            cache[key] = (str(ch), int(ppm))
-        while len(cache) > _CLS_CACHE_MAX:
-            cache.popitem(last=False)
         resolved = [(str(c), int(p)) for c, p in zip(chars, ppms)]
-    else:
-        resolved = []
+        memo.update(zip(novel_keys, resolved))
+        _trim(memo, _GLYPH_MEMO_MAX)
 
     texts, stats = [], []
     for layout in layouts:
@@ -207,7 +128,7 @@ def ocr_pages_to_text_margins(pages, weights: OcrWeights):
                 if s is None:
                     chs.append(" ")
                     continue
-                ch, ppm = s if isinstance(s, tuple) else resolved[s]
+                ch, ppm = resolved[s] if isinstance(s, int) else s
                 chs.append(ch)
                 ppm_vals.append(ppm)
             text_lines.append("".join(chs))
@@ -217,3 +138,13 @@ def ocr_pages_to_text_margins(pages, weights: OcrWeights):
         else:
             stats.append((0, None, 0))
     return texts, stats
+
+
+def ocr_pages_to_text(pages: Iterable[np.ndarray], weights: OcrWeights) -> List[str]:
+    """Texts only of :func:`ocr_pages_to_text_margins`."""
+    return ocr_pages_to_text_margins(pages, weights)[0]
+
+
+def extract_text(rgb: np.ndarray, weights: OcrWeights) -> str:
+    """OCR one page image ((h, w, 3) uint8 RGB) into its text string."""
+    return ocr_pages_to_text([rgb], weights)[0]

@@ -18,15 +18,16 @@ Three stages, each with the resume discipline its data size demands:
   OCR-text convention, extraction_queries.interleaved_text_render),
   write partitioned by part_id with the shared done-part ledger.
 
-Single-pass confidence: stage E runs the extraction pipeline with
-``with_margins=True`` (kernels/ocr.ocr_pages_to_text_margins — margins
-ride the SAME NN forward; text output pinned identical to the default
-path) and ``degrade_slice=True`` (the inject-then-detect demo input:
-every OCR_NOISE_EVERY-th document's pages are deterministically
-degraded BEFORE OCR, as degraded scans arrive degraded in production).
-Stage D then reads the per-doc ``doc_min_margin_ppm`` column straight
-off the extracted table — no second decode/NN pass over the blobs.
-The exact-match flagship never sets either flag, so the
+Single-pass confidence: the one OCR walk
+(kernels/ocr.ocr_pages_to_text_margins) computes every page's margins
+from the SAME NN forward as its text.  Stage E runs the extraction
+pipeline with ``with_margins=True``, which emits them as a column, and
+``degrade_slice=True`` (the inject-then-detect demo input: every
+OCR_NOISE_EVERY-th document's pages are deterministically degraded
+BEFORE OCR, as degraded scans arrive degraded in production).  Stage D
+then reads the per-doc ``doc_min_margin_ppm`` column straight off the
+extracted table — no second decode/NN pass over the blobs.  The
+exact-match flagship sets neither flag, so its output schema and the
 reference-equality fixtures are untouched.
 """
 

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from .kernels.bmp import decode_media_blob
 from .kernels.html_strip import strip_html_batch
 from .kernels.nn import OcrWeights, load_weights
-from .kernels.ocr import ocr_pages_to_text
+from .kernels.ocr import ocr_pages_to_text_margins
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_MLP = os.path.join(_REPO_ROOT, "fixtures", "ocrwb.txt")
@@ -120,7 +120,7 @@ def deskew_page(rgb):
     return np.repeat(fixed[:, :, None], 3, axis=2)
 
 
-def _ocr_quarantine_fallback(pages, idx, errs, run_ocr):
+def _ocr_quarantine_fallback(pages, idx, errs, weights):
     """Batch OCR raised under ``on_error='quarantine'``: isolate the
     raising page(s) by re-running OCR one page at a time, recording
     raisers into ``errs`` (mutated in place, keyed by batch position)
@@ -134,7 +134,7 @@ def _ocr_quarantine_fallback(pages, idx, errs, run_ocr):
     texts, stats, kept = [], [], []
     for k, page in enumerate(pages):
         try:
-            t1, s1 = run_ocr([page])
+            t1, s1 = ocr_pages_to_text_margins([page], weights)
         except Exception as ex:  # noqa: BLE001 — quarantine = catch all
             errs[idx[k]] = f"{type(ex).__name__}: {ex}"[:200]
             continue
@@ -149,7 +149,6 @@ def extract_media_spans(
     media: DataFrame,
     weights_bc,
     deskew: bool = False,
-    skew_treatment: bool = True,
     on_error: str = "fail",
     with_margins: bool = False,
     degrade_slice: bool = False,
@@ -170,14 +169,6 @@ def extract_media_spans(
     * the join is hinted SHUFFLE_HASH: sort-merge would sort blob-sized
       rows for no benefit.
 
-    ``skew_treatment=False`` is the BENCH-ONLY counterfactual
-    (scripts/skew_bench.py): the OCR stage re-partitions by doc_id
-    after the join, so a media-heavy document's blobs pile into one
-    task — the naive whole-document-per-task shape whose straggler
-    cost the media_ref hashing above is designed to avoid.  Results
-    are identical either way (the reassembly groups by doc_id); only
-    the task-time distribution differs.
-
     ``on_error``: 'fail' (default — a corrupt blob fails the task,
     keeping the exact-match acceptance semantics) or 'quarantine' — the
     100TB posture: a blob whose decode/OCR raises becomes a
@@ -185,15 +176,16 @@ def extract_media_spans(
     batch is unaffected, and corrupt inputs are VISIBLE in the output
     instead of killing a thousand-executor stage at hour nine.
 
-    ``with_margins=True`` emits an extra ``min_margin_ppm`` column
-    (per-page softmax-margin floor) from the SAME forward pass — the
-    single-pass confidence path the multimodal curation job uses
-    (kernels/ocr.ocr_pages_to_text_margins; text output is identical
-    to the default path, pinned by test).  ``degrade_slice=True``
-    applies the deterministic synth degradation (inject_scan_noise_rgb)
-    to every OCR_NOISE_EVERY-th document's pages AFTER decode — the
-    inject-then-detect demo input; both flags are off on the
-    exact-match flagship path.
+    Every batch runs the one OCR walk,
+    kernels/ocr.ocr_pages_to_text_margins, which yields each page's text
+    and its softmax-margin stats from the same forward.
+    ``with_margins=True`` only decides whether the per-page margin floor
+    is emitted as an extra ``min_margin_ppm`` column — the output schema
+    the multimodal curation job reads; the text is the same either way.
+    ``degrade_slice=True`` applies the deterministic synth degradation
+    (inject_scan_noise_rgb) to every OCR_NOISE_EVERY-th document's pages
+    AFTER decode — the inject-then-detect demo input; both flags are off
+    on the exact-match flagship path.
     """
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
@@ -209,11 +201,8 @@ def extract_media_spans(
         .join(media.repartition(n_tasks, "media_ref").hint("shuffle_hash"),
               "media_ref", "left")
     )
-    if not skew_treatment:
-        media_spans = media_spans.repartition(n_tasks, "doc_id")
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernels.ocr import ocr_pages_to_text_margins
         from .synth import inject_scan_noise_rgb, is_degraded_ref
 
         w = weights_bc.value
@@ -254,21 +243,13 @@ def extract_media_spans(
                     continue
                 idx.append(i)
                 pages.append(page)
-            def run_ocr(pgs):
-                if with_margins:
-                    return (
-                        ocr_pages_to_text_margins(pgs, w) if pgs else ([], [])
-                    )
-                t = ocr_pages_to_text(pgs, w) if pgs else []
-                return t, [(0, None, 0)] * len(t)
-
             try:
-                texts, stats = run_ocr(pages)
+                texts, stats = ocr_pages_to_text_margins(pages, w)
             except Exception:
                 if not quarantine:
                     raise
                 texts, stats, idx = _ocr_quarantine_fallback(
-                    pages, idx, errs, run_ocr
+                    pages, idx, errs, w
                 )
             out = [None] * len(pdf)
             kind = ["media"] * len(pdf)

@@ -296,13 +296,13 @@ def _brute_margin_ppm(mat: np.ndarray, w) -> int:
 
 def expected_confidence_rows_for(sf_dir: str, weights):
     """Offline run of the confidence-routing pipeline (binarize ->
-    optional injected degradation -> page_margin_stats -> decision);
-    every CROSSCHECK_EVERY-th document's pages get every glyph margin
-    re-derived via the dense-conv/naive-softmax brute path."""
+    optional injected degradation -> ocr_pages_to_text_margins stats ->
+    decision); every CROSSCHECK_EVERY-th document's pages get every
+    glyph margin re-derived via the dense-conv/naive-softmax brute path."""
     from ocr_gang_spark.extraction_queries import OCR_REVIEW_PPM
     from ocr_gang_spark.kernels.bmp import decode_media_blob
     from ocr_gang_spark.kernels.image_ops import binarize as bz
-    from ocr_gang_spark.kernels.ocr import page_margin_stats
+    from ocr_gang_spark.kernels.ocr import ocr_pages_to_text_margins
     from ocr_gang_spark.synth import (
         blob_for_ref,
         inject_scan_noise,
@@ -320,7 +320,7 @@ def expected_confidence_rows_for(sf_dir: str, weights):
             degraded = is_degraded_ref(ref)
             if degraded:
                 bw = inject_scan_noise(ref, bw)
-            ((n, mn, sm),) = page_margin_stats([bw], weights)
+            ((n, mn, sm),) = ocr_pages_to_text_margins([bw], weights)[1]
             decision = (
                 "review" if mn is not None and mn < OCR_REVIEW_PPM else "accept"
             )

@@ -1,12 +1,13 @@
 """OCR confidence routing: per-glyph softmax top1-top2 margins
-(kernels/nn.classify_margin_ppm), per-page aggregates
-(kernels/ocr.page_margin_stats), and the inject-then-detect driver
-query (extraction_queries.ocr_confidence_stats)."""
+(kernels/nn.classify_margin_ppm), per-page aggregates from the one OCR
+walk (kernels/ocr.ocr_pages_to_text_margins) and its memos, and the
+inject-then-detect driver query
+(extraction_queries.ocr_confidence_stats)."""
 
 import numpy as np
 import pytest
 
-from ocr_gang_spark.atlas import page_for_ref
+from ocr_gang_spark.atlas import page_for_ref, render_page
 from ocr_gang_spark.extraction_queries import OCR_REVIEW_PPM, ocr_confidence_stats
 from ocr_gang_spark.kernels.image_ops import binarize, segment_page
 from ocr_gang_spark.kernels.nn import (
@@ -18,11 +19,12 @@ from ocr_gang_spark.kernels.nn import (
     cnn_forward_binary,
     conv_lut_for,
 )
+from ocr_gang_spark.kernels import ocr
 from ocr_gang_spark.kernels.ocr import (
     ocr_pages_to_text,
     ocr_pages_to_text_margins,
-    page_margin_stats,
 )
+from ocr_gang_spark.pipeline import default_weights
 from ocr_gang_spark.synth import (
     OCR_NOISE_EVERY,
     inject_scan_noise,
@@ -61,9 +63,9 @@ def test_margin_matches_direct_softmax(glyphs, weights):
 
 def test_page_stats_aggregate_per_instance(glyphs, weights):
     # a page-of-batches view: duplicate page must double the sum, keep min
-    (n1, mn1, sm1), (n2, mn2, sm2) = page_margin_stats(
+    (n1, mn1, sm1), (n2, mn2, sm2) = ocr_pages_to_text_margins(
         [binarize(page_for_ref("m42-doc-00000007-1")[1])] * 2, weights
-    )
+    )[1]
     assert (n1, mn1, sm1) == (n2, mn2, sm2)
     _, ppm = classify_margin_ppm(glyphs, weights)
     # page glyph multiset == segmented glyph multiset
@@ -73,7 +75,7 @@ def test_page_stats_aggregate_per_instance(glyphs, weights):
 
 def test_empty_page(weights):
     blank = np.full((40, 60), 255, dtype=np.uint8)
-    assert page_margin_stats([blank], weights) == [(0, None, 0)]
+    assert ocr_pages_to_text_margins([blank], weights)[1] == [(0, None, 0)]
 
 
 def test_noise_injection_is_deterministic():
@@ -95,9 +97,7 @@ def test_rgb_noise_commutes_with_binarize():
         assert np.array_equal(via_rgb, via_bw)
 
 
-def test_margins_path_text_identical_and_stats_match(weights):
-    # fused single-pass path: texts byte-identical to the exact-match
-    # path, stats equal to the separate page_margin_stats pass
+def _mixed_pages():
     refs = [
         "m42-doc-00000005-1",  # degraded slice member
         "m42-doc-00000007-1",
@@ -110,10 +110,40 @@ def test_margins_path_text_identical_and_stats_match(weights):
             rgb = inject_scan_noise_rgb(ref, rgb)
         pages.append(rgb)
     pages.append(np.full((40, 60, 3), 255, dtype=np.uint8))  # empty page
+    return pages
+
+
+def test_margins_path_text_identical_and_stats_match(weights):
+    # texts byte-identical to the text-only view; RGB pages and their
+    # binarized 2-D twins give the same (texts, stats)
+    pages = _mixed_pages()
     texts, stats = ocr_pages_to_text_margins(pages, weights)
     assert texts == ocr_pages_to_text(pages, weights)
-    assert stats == page_margin_stats([binarize(p) for p in pages], weights)
+    assert (texts, stats) == ocr_pages_to_text_margins(
+        [binarize(p) for p in pages], weights
+    )
     assert stats[-1] == (0, None, 0)
+
+
+def test_text_path_warms_memo_margins_keep_ppm():
+    # the text-only view fills the shared glyph memo; a margin call
+    # served from it must match a cold call on fresh weights
+    pages = _mixed_pages()
+    warm = default_weights()
+    ocr_pages_to_text(pages, warm)
+    assert warm._glyph_memo
+    cold = ocr_pages_to_text_margins(pages, default_weights())
+    assert ocr_pages_to_text_margins(pages, warm) == cold
+    assert any(mn is not None and mn < 1_000_000 for _, mn, _ in cold[1])
+
+
+def test_matrix_memo_bounded_after_call(weights, monkeypatch):
+    # noisy glyphs are all distinct crops, so one page overruns a small
+    # bound within a single call; the bound must hold once it returns
+    monkeypatch.setattr(ocr, "_MAT_CACHE_MAX", 8)
+    page, _ = render_page("Bounded matrix memo\nevery crop distinct", key="mat-bound")
+    ocr_pages_to_text([page], weights)
+    assert len(ocr._MAT_CACHE) <= 8
 
 
 def test_router_flags_degraded_slice(spark):

@@ -154,23 +154,26 @@ def test_corrupt_blob_quarantine_vs_fail(spark):
         extract_documents(docs, corrupted, on_error="bogus")
 
 
-def test_ocr_quarantine_fallback_isolates_raiser():
+def test_ocr_quarantine_fallback_isolates_raiser(monkeypatch):
     """The quarantine promise covers the OCR stage too: when batch OCR
     raises, the per-page fallback quarantines exactly the raising page
     and every healthy page in the Arrow batch still produces text
     (r3 self-review — previously only decode was inside the try)."""
-    from ocr_gang_spark.pipeline import _ocr_quarantine_fallback
+    from ocr_gang_spark import pipeline
 
     pages = ["good-a", "pathological", "good-b"]
     idx = [0, 2, 5]  # batch positions of the decodable blobs
     errs = {}
 
-    def run_ocr(pgs):
+    def fake_ocr(pgs, weights):
         if "pathological" in pgs:
             raise RuntimeError("segmentation blew up")
         return [p.upper() for p in pgs], [(0, None, 0)] * len(pgs)
 
-    texts, stats, kept = _ocr_quarantine_fallback(pages, idx, errs, run_ocr)
+    monkeypatch.setattr(pipeline, "ocr_pages_to_text_margins", fake_ocr)
+    texts, stats, kept = pipeline._ocr_quarantine_fallback(
+        pages, idx, errs, None
+    )
     assert kept == [0, 5]
     assert texts == ["GOOD-A", "GOOD-B"]
     assert stats == [(0, None, 0), (0, None, 0)]
