@@ -1,23 +1,26 @@
-"""Partition-level resumable extraction runs with lineage + metrics.
+"""Partition-level resumable runs with lineage + metrics.
 
 north_rule: "resumable from checkpoint with per-partition lineage +
 metrics".  The reference has no counterpart (single-image CLI); this is
 a batch-resumability design (SURVEY.md §2.7: Structured Streaming not
-required):
+required), one done-part ledger protocol shared by run_extraction,
+curation.run_curation and stage M of mm_curation.run_mm_curation:
 
 * every document deterministically belongs to a partition
   ``part_id = pmod(xxhash64(doc_id), n_parts)`` — a pure function, so
-  resume needs NO join against the output, only an anti-join of the
-  *input* against the tiny checkpoint table;
-* output is written partitionBy(part_id) with dynamic partition
-  overwrite => re-running a part is idempotent (exactly-once per part);
-* after the write, per-part metrics (docs, spans, chars) are aggregated
-  from the *written* files (cheap columnar count, also validates the
-  write) and appended to the checkpoint table with run_id lineage.
+  resume needs NO join against the output: done_part_ids collects the
+  done part_ids (at most n_parts) to the driver, without a Spark job
+  while the ledger is empty, and the job filters its input with
+  ``~part_id.isin(done)``;
+* commit_parts writes the rest partitionBy(part_id) with dynamic
+  partition overwrite => re-running a part is idempotent (exactly-once
+  per part), aggregates per-part metrics from the *written* files
+  (cheap columnar scan, also validates the write), and the driver
+  appends them to the ledger as one parquet file with run_id lineage.
 
-A killed run leaves some parts absent from the checkpoint table; the
-next invocation processes exactly those.  Iceberg note: on a real
-cluster the output/checkpoint tables would be Iceberg
+A killed run leaves some parts absent from the ledger; the next
+invocation processes exactly those.  Iceberg note: on a real cluster
+the output/checkpoint tables would be Iceberg
 (``writeTo(...).overwritePartitions()`` gives the same idempotency with
 snapshot isolation); this sandbox has no Iceberg jars, so the parquet
 dynamic-overwrite path is the tested implementation and the API keeps
@@ -29,13 +32,16 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import broadcast_weights, extract_documents
+from .session import stage_tasks
 
 CHECKPOINT_SCHEMA = (
     "part_id int, n_parts int, n_docs long, n_spans_out long, n_chars_out long, "
@@ -47,23 +53,97 @@ def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     return df.withColumn("part_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_parts)).cast("int"))
 
 
-def completed_parts(spark: SparkSession, checkpoint_dir: str, n_parts: int) -> DataFrame:
-    """Distinct part_ids already marked done *under the same n_parts
-    partitioning* (empty DF if no checkpoint).  part_id is only
-    meaningful relative to n_parts, so entries written with a different
-    configuration are ignored rather than silently short-circuiting a
-    run with genuine remaining work (ADVICE r1).  Defense-in-depth: via
-    run_extraction an n_parts change is refused outright by the run
-    manifest before this filter ever applies (r3)."""
-    try:
-        cp = spark.read.parquet(checkpoint_dir)
-        return (
-            cp.where((F.col("status") == "done") & (F.col("n_parts") == n_parts))
-            .select("part_id")
-            .distinct()
-        )
-    except Exception:
-        return spark.createDataFrame([], "part_id int")
+def _ledger_has_data(checkpoint_dir: str) -> bool:
+    """Whether checkpoint_dir holds a file Spark's parquet reader would
+    read; it skips names starting with '_' or '.', so the run manifest
+    alone does not count."""
+    return os.path.isdir(checkpoint_dir) and any(
+        not name.startswith(("_", ".")) for name in os.listdir(checkpoint_dir)
+    )
+
+
+def done_part_ids(spark: SparkSession, checkpoint_dir: str, n_parts: int) -> set[int]:
+    """part_ids already marked done *under the same n_parts
+    partitioning*.  part_id is only meaningful relative to n_parts, so
+    entries written with a different configuration are ignored rather
+    than silently short-circuiting a run with genuine remaining work
+    (ADVICE r1).  Defense-in-depth: every job's run manifest refuses an
+    n_parts change outright before this filter ever applies (r3).
+    Starts no Spark job while the ledger holds no data file."""
+    if not _ledger_has_data(checkpoint_dir):
+        return set()
+    done = spark.read.parquet(checkpoint_dir).where(
+        (F.col("status") == "done") & (F.col("n_parts") == n_parts)
+    )
+    return {r.part_id for r in done.select("part_id").distinct().collect()}
+
+
+_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string()}
+
+
+def _append_ledger(checkpoint_dir: str, rows: list[dict], schema: str) -> None:
+    """One driver-written parquet file with the column types Spark
+    writes for the DDL ``schema``, so older Spark-written ledger files
+    read with it as one table; the '_' temp name hides it from readers
+    until the rename (the run manifest's local-FS stand-in)."""
+    arrow_schema = pa.schema(
+        [(name, _ARROW_TYPES[t]) for name, t in (f.split() for f in schema.split(","))]
+    )
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(checkpoint_dir, "_" + name)
+    pq.write_table(pa.Table.from_pylist(rows, arrow_schema), tmp)
+    os.replace(tmp, os.path.join(checkpoint_dir, name))
+
+
+def commit_parts(
+    spark: SparkSession,
+    parts: DataFrame,
+    output_dir: str,
+    checkpoint_dir: str,
+    *,
+    n_parts: int,
+    done_ids: set[int],
+    run_id: str,
+    t0: float,
+    schema: str,
+    sums: dict[str, Column],
+) -> tuple[int, int, int]:
+    """Write ``parts`` (rows whose part_id is not in ``done_ids``) to
+    output_dir and append a ledger row (``schema``) per written part:
+    n_docs plus ``sums``, each ledger column's aggregate over the part's
+    written rows.  Returns (parts written, docs written, wall_ms up to
+    the write); empty input writes no part file and no ledger row.
+
+    The explicit task count stops AQE coalescing the small output into
+    one task that commits every part file in turn; each part still
+    lands in one task, so one file per part.  partitionOverwriteMode
+    rides the WRITER (scoped to this write), never spark.conf.set — a
+    session-level set leaked dynamic semantics into unrelated overwrite
+    writes.  Every part dir outside ``done_ids`` is
+    attributed to this run: with immutable inputs across resumes
+    (ADVICE r1), an orphan part from a crashed run is exactly the data
+    this run would have produced."""
+    parts.repartition(stage_tasks(spark), "part_id").write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("part_id").parquet(output_dir)
+    wall_ms = int((time.time() - t0) * 1000)
+    new_ids = sorted(set(_part_file_stats(output_dir)) - done_ids)
+    if not new_ids:
+        return 0, 0, wall_ms
+    metrics = (
+        spark.read.parquet(output_dir)
+        .where(F.col("part_id").isin(new_ids))
+        .groupBy("part_id")
+        .agg(F.count("*").alias("n_docs"), *(agg.alias(c) for c, agg in sums.items()))
+        .collect()
+    )
+    rows = [
+        {**m.asDict(), "n_parts": n_parts, "wall_ms": wall_ms,
+         "status": "done", "run_id": run_id}
+        for m in metrics
+    ]
+    _append_ledger(checkpoint_dir, rows, schema)
+    return len(rows), sum(r["n_docs"] for r in rows), wall_ms
 
 
 # Underscore-prefixed so Spark's parquet reader ignores it inside
@@ -136,9 +216,10 @@ def run_extraction(
 ) -> RunResult:
     """One (possibly resuming) extraction run.
 
-    Documents whose part_id is already checkpointed as done are skipped
-    via a broadcast anti-join (the checkpoint table is tiny); remaining
-    parts are extracted, written idempotently, measured, and marked done.
+    Documents whose part_id is already done in the ledger are filtered
+    out of the input; the remaining parts are extracted and handed to
+    commit_parts, which writes them idempotently, measures them and
+    marks them done.
     """
     run_id = run_id or f"run-{int(time.time() * 1000)}"
     # n_parts is output-affecting too: the ledger ignores done entries
@@ -161,16 +242,11 @@ def run_extraction(
     t0 = time.time()
 
     docs_p = with_part_id(docs, n_parts)
-    done = completed_parts(spark, checkpoint_dir, n_parts)
-    remaining = docs_p.join(F.broadcast(done), "part_id", "left_anti")
-
-    # No pre-scan of the input to enumerate work (the old
-    # remaining.distinct().collect() was a full input scan + shuffle —
-    # pure fixed cost on every run): the anti-join alone decides what is
-    # processed, and the parts completed THIS run are read back off the
-    # written output below.  Only a resume pays the cheap done/empty
-    # probes; a fresh run goes straight to the extraction job.
-    done_ids = {r.part_id for r in done.collect()}
+    done_ids = done_part_ids(spark, checkpoint_dir, n_parts)
+    remaining = docs_p.where(~F.col("part_id").isin(sorted(done_ids)))
+    # no pre-scan of the input to enumerate work; only a resume pays
+    # the empty probe, which spares the blob shuffle when every part
+    # holding documents is already done
     if len(done_ids) >= n_parts or (done_ids and remaining.isEmpty()):
         return RunResult(run_id, 0, 0, int((time.time() - t0) * 1000))
 
@@ -190,55 +266,11 @@ def run_extraction(
             lambda acc, x: acc + x,
         ).alias("n_chars"),
     )
-
-    # co-locate each part before the partitioned write: otherwise every
-    # write task emits a file into every part_id dir (tasks x parts small
-    # files — a real cost on object stores and this box alike).
-    # partitionOverwriteMode rides the WRITER as an option (scoped to
-    # this write), never spark.conf.set — a session-level set leaked
-    # dynamic semantics into unrelated overwrite writes after the job
-    # returned (round-4 review)
-    out.repartition("part_id").write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("part_id").parquet(output_dir)
-
-    # lineage metrics from the *written* files (validates the write too);
-    # column pruning means this scans only (part_id, n_spans, n_chars);
-    # the filter against the old checkpoint keeps the parts completed by
-    # THIS run.  Assumption (documented, ADVICE r1): inputs are immutable
-    # across resumes — an orphan part_id left in output_dir by a crashed
-    # run whose docs no longer appear in the input would be attributed to
-    # this run's lineage; with immutable inputs that part is exactly the
-    # data this run would have produced, so attribution stays truthful.
-    try:
-        written = spark.read.parquet(output_dir)
-    except Exception:  # empty input, nothing written -> no output dir/schema
-        return RunResult(run_id, 0, 0, int((time.time() - t0) * 1000))
-    if done_ids:
-        written = written.where(~F.col("part_id").isin(list(done_ids)))
-    wall_ms = int((time.time() - t0) * 1000)
-    metrics_rows = (
-        written.groupBy("part_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_spans").alias("n_spans_out"),
-            F.sum("n_chars").alias("n_chars_out"),
-        )
-        .withColumn("n_parts", F.lit(n_parts))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("status", F.lit("done"))
-        .withColumn("run_id", F.lit(run_id))
-        .select(
-            "part_id", "n_parts", "n_docs", "n_spans_out", "n_chars_out",
-            "wall_ms", "status", "run_id",
-        )
-    ).collect()
-    spark.createDataFrame(metrics_rows, CHECKPOINT_SCHEMA).write.mode("append").parquet(
-        checkpoint_dir
-    )
-
-    n_docs = sum(r.n_docs for r in metrics_rows)
-    return RunResult(run_id, len(metrics_rows), n_docs, wall_ms)
+    return RunResult(run_id, *commit_parts(
+        spark, out, output_dir, checkpoint_dir, n_parts=n_parts,
+        done_ids=done_ids, run_id=run_id, t0=t0, schema=CHECKPOINT_SCHEMA,
+        sums={"n_spans_out": F.sum("n_spans"), "n_chars_out": F.sum("n_chars")},
+    ))
 
 
 @dataclass
@@ -437,14 +469,9 @@ def load_output(spark: SparkSession, output_dir: str) -> DataFrame:
 
 
 def checkpoint_table(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    if not os.path.exists(checkpoint_dir):
+    if not _ledger_has_data(checkpoint_dir):
+        # no ledger, or only the underscore-prefixed run manifest (a
+        # first run crashed before its first append): empty progress,
+        # not 'Unable to infer schema'
         return spark.createDataFrame([], CHECKPOINT_SCHEMA)
-    try:
-        return spark.read.parquet(checkpoint_dir)
-    except AnalysisException:
-        # dir exists but holds only the underscore-prefixed run
-        # manifest (a first run crashed between manifest write and the
-        # first metrics append): same empty-progress answer
-        # completed_parts already gives for this state, instead of
-        # 'Unable to infer schema' (round-4 review)
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+    return spark.read.parquet(checkpoint_dir)

@@ -22,4 +22,5 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> Dict[str, str]:
-    return {name: sql for name, (_fn, sql) in _REGISTRY.items() if sql is not None}
+    return {name: sql() if callable(sql) else sql
+            for name, (_fn, sql) in _REGISTRY.items() if sql is not None}

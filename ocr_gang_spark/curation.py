@@ -39,7 +39,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .checkpoint import _check_run_manifest, completed_parts, with_part_id
+from .checkpoint import _check_run_manifest, commit_parts, done_part_ids, with_part_id
 from .textops import (
     DEDUP_JACCARD_T,
     SEQ_PACK_BUDGET,
@@ -168,10 +168,9 @@ def run_curation(
     )
     t0 = time.time()
 
-    # sibling of the ledger dir, NOT inside it: completed_parts reads
+    # sibling of the ledger dir, NOT inside it: done_part_ids reads
     # checkpoint_dir as one parquet table, and a foreign-schema subdir
-    # would break that listing (silently disabling resume via its
-    # try/except)
+    # would break that read
     decisions_dir = checkpoint_dir.rstrip("/") + "_decisions"
     if not _decisions_ready(decisions_dir):
         curation_decisions(docs).write.mode("overwrite").parquet(decisions_dir)
@@ -194,48 +193,23 @@ def run_curation(
         "doc_id", "bin_id", "bin_offset", "split"
     )
     out = with_part_id(docs.join(kept, "doc_id"), n_parts)
-    done = completed_parts(spark, checkpoint_dir, n_parts)
-    done_ids = {r.part_id for r in done.collect()}
-    remaining = out.join(F.broadcast(done), "part_id", "left_anti")
-
-    if len(done_ids) >= n_parts or (done_ids and remaining.isEmpty()):
+    done_ids = done_part_ids(spark, checkpoint_dir, n_parts)
+    if len(done_ids) >= n_parts:
         return CurationResult(
             run_id, 0, 0, tallies.get("quality", 0), tallies.get("dedup", 0),
             n_bins, int((time.time() - t0) * 1000),
         )
 
-    remaining.withColumn(
-        "n_tokens", F.size(F.split("text", " ")).cast("bigint")
-    ).repartition("part_id").write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("part_id").parquet(output_dir)
-
-    written = spark.read.parquet(output_dir)
-    if done_ids:
-        written = written.where(~F.col("part_id").isin(list(done_ids)))
-    wall_ms = int((time.time() - t0) * 1000)
-    metrics_rows = (
-        written.groupBy("part_id")
-        .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").alias("n_tokens_out"))
-        .withColumn("n_parts", F.lit(n_parts))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("status", F.lit("done"))
-        .withColumn("run_id", F.lit(run_id))
-        .select(
-            "part_id", "n_parts", "n_docs", "n_tokens_out",
-            "wall_ms", "status", "run_id",
-        )
-    ).collect()
-    spark.createDataFrame(metrics_rows, CURATION_CHECKPOINT_SCHEMA).write.mode(
-        "append"
-    ).parquet(checkpoint_dir)
-
+    n_done, n_docs, wall_ms = commit_parts(
+        spark,
+        out.where(~F.col("part_id").isin(sorted(done_ids))).withColumn(
+            "n_tokens", F.size(F.split("text", " ")).cast("bigint")
+        ),
+        output_dir, checkpoint_dir, n_parts=n_parts, done_ids=done_ids,
+        run_id=run_id, t0=t0, schema=CURATION_CHECKPOINT_SCHEMA,
+        sums={"n_tokens_out": F.sum("n_tokens")},
+    )
     return CurationResult(
-        run_id,
-        len(metrics_rows),
-        sum(r.n_docs for r in metrics_rows),
-        tallies.get("quality", 0),
-        tallies.get("dedup", 0),
-        n_bins,
-        wall_ms,
+        run_id, n_done, n_docs, tallies.get("quality", 0),
+        tallies.get("dedup", 0), n_bins, wall_ms,
     )

@@ -845,7 +845,7 @@ def media_resolution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     document, how many of its media spans resolve against the current
     blob-store snapshot — the planning input for incremental
     re-extraction (blocked/partial docs are re-enqueued when the blobs
-    backfill; checkpoint.run_extraction's anti-join resume then
+    backfill; checkpoint.run_extraction's done-part resume then
     processes exactly those).  The snapshot membership is the
     deterministic md5 rule above, identical in both engines.
 

@@ -16,7 +16,8 @@ Three stages, each with the resume discipline its data size demands:
 * Stage M (materialization) — join extracted docs x accepted
   decisions, render the interleaved training text (<img:ref> +
   OCR-text convention, extraction_queries.interleaved_text_render),
-  write partitioned by part_id with the shared done-part ledger.
+  write partitioned by part_id through the shared done-part ledger
+  (checkpoint.commit_parts).
 
 Single-pass confidence: the one OCR walk
 (kernels/ocr.ocr_pages_to_text_margins) computes every page's margins
@@ -42,7 +43,8 @@ from pyspark.sql import functions as F
 
 from .checkpoint import (
     _check_run_manifest,
-    completed_parts,
+    commit_parts,
+    done_part_ids,
     run_extraction,
     with_part_id,
 )
@@ -223,52 +225,20 @@ def run_mm_curation(
         ),
         n_parts,
     )
-    done = completed_parts(spark, cp_dir, n_parts)
-    done_ids = {r.part_id for r in done.collect()}
-    remaining = out.join(F.broadcast(done), "part_id", "left_anti")
-    # empty `remaining` short-circuits on FRESH runs too: a corpus where
-    # the confidence gate rejects every document would otherwise write a
-    # zero-row partitioned dir (just _SUCCESS, no part files) and crash
-    # the shards read-back below (code-review fix) — the result row with
-    # n_docs_out=0 and n_rejected set IS the correct answer
-    if len(done_ids) >= n_parts or remaining.isEmpty():
+    done_ids = done_part_ids(spark, cp_dir, n_parts)
+    if len(done_ids) >= n_parts:
         return MMCurationResult(
             run_id, 0, 0, n_rejected, n_bins,
             int((time.time() - t0) * 1000),
         )
 
-    remaining.repartition("part_id").write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("part_id").parquet(os.path.join(workdir, "shards"))
-
-    written = spark.read.parquet(os.path.join(workdir, "shards"))
-    if done_ids:
-        written = written.where(~F.col("part_id").isin(list(done_ids)))
-    wall_ms = int((time.time() - t0) * 1000)
-    metrics_rows = (
-        written.groupBy("part_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.length("rendered")).alias("n_chars_out"),
-        )
-        .withColumn("n_parts", F.lit(n_parts))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .withColumn("status", F.lit("done"))
-        .withColumn("run_id", F.lit(run_id))
-        .select(
-            "part_id", "n_parts", "n_docs", "n_chars_out",
-            "wall_ms", "status", "run_id",
-        )
-    ).collect()
-    spark.createDataFrame(metrics_rows, MM_CHECKPOINT_SCHEMA).write.mode(
-        "append"
-    ).parquet(cp_dir)
-
-    return MMCurationResult(
-        run_id,
-        len(metrics_rows),
-        sum(r.n_docs for r in metrics_rows),
-        n_rejected,
-        n_bins,
-        wall_ms,
+    # a corpus the confidence gate rejects entirely writes no shard:
+    # n_docs_out=0 with n_rejected set IS the correct answer
+    n_done, n_docs, wall_ms = commit_parts(
+        spark, out.where(~F.col("part_id").isin(sorted(done_ids))),
+        os.path.join(workdir, "shards"), cp_dir, n_parts=n_parts,
+        done_ids=done_ids, run_id=run_id, t0=t0,
+        schema=MM_CHECKPOINT_SCHEMA,
+        sums={"n_chars_out": F.sum(F.length("rendered"))},
     )
+    return MMCurationResult(run_id, n_done, n_docs, n_rejected, n_bins, wall_ms)

@@ -46,6 +46,7 @@ from .kernels.bmp import decode_media_blob
 from .kernels.html_strip import strip_html_batch
 from .kernels.nn import OcrWeights, load_weights
 from .kernels.ocr import ocr_pages_to_text_margins
+from .session import stage_tasks
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DEFAULT_MLP = os.path.join(_REPO_ROOT, "fixtures", "ocrwb.txt")
@@ -189,11 +190,7 @@ def extract_media_spans(
     """
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
-    spark = spans.sparkSession
-    n_tasks = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        spark.sparkContext.defaultParallelism * 2,
-    )
+    n_tasks = stage_tasks(spans.sparkSession)
     media_spans = (
         spans.where(F.col("kind") == "media")
         .select("doc_id", "media_ref", "offset")

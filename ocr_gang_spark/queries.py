@@ -23,7 +23,7 @@ Determinism rules used throughout (so Spark and DuckDB hash-match):
 from __future__ import annotations
 
 import os
-from typing import Callable, Dict, Optional, Tuple
+from typing import Callable, Dict, Optional, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,11 +34,14 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# registry: name -> (spark_fn, oracle_sql | None)
-_REGISTRY: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]] = {}
+# registry: name -> (spark_fn, oracle_sql | None); an oracle reading a
+# fixture is a callable that contract.oracle_sql resolves on the driver
+# (executors import the package from a zip with no fixtures)
+OracleSql = Optional[Union[str, Callable[[], str]]]
+_REGISTRY: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], OracleSql]] = {}
 
 
-def register(name: str, sql: Optional[str]):
+def register(name: str, sql: OracleSql):
     def deco(fn):
         _REGISTRY[name] = (fn, sql)
         return fn

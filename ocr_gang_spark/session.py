@@ -1,7 +1,10 @@
 """Tuned SparkSession builder (local mode here; cluster-safe confs).
 
-Reads SPARK_GRAFT_CPUS (default 32) so the same code runs the N-vs-4N
-scaling evidence (local[2] vs local[8]) required by BASELINE.json.
+Task slots default to the CPUs this process may run on and the driver
+heap to half of physical RAM; SPARK_GRAFT_CPUS (or ``cpus=``) and
+SPARK_GRAFT_DRIVER_MEM override them, so the same code runs the
+N-vs-4N scaling evidence (local[2] vs local[8]) required by
+BASELINE.json.
 
 Two execution modes (SPARK_GRAFT_EXEC_MODE or the exec_mode param):
 
@@ -36,17 +39,36 @@ def build_session(
     return get_spark(app_name, cpus=cpus, exec_mode=exec_mode)
 
 
+def driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else half of physical RAM: the JVM heap
+    may grow to this size, and a heap past RAM gets the JVM OOM-killed
+    partway through a run (the old 32g default on a 15 GB host)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(512, ram_mb // 2)}m"
+
+
+def stage_tasks(spark: SparkSession) -> int:
+    """Explicit task count for a stage AQE must not coalesce by bytes:
+    the CPU-bound OCR stage, and the partitioned write that should
+    spread its file commits over every task slot."""
+    return max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+        spark.sparkContext.defaultParallelism * 2,
+    )
+
+
 def get_spark(
     app_name: str = "ocr_gang_spark",
     cpus: int | None = None,
     exec_mode: str | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        env = os.environ.get("SPARK_GRAFT_CPUS")
+        cpus = int(env) if env else len(os.sched_getaffinity(0))
     exec_mode = exec_mode or os.environ.get("SPARK_GRAFT_EXEC_MODE", "threads")
     if exec_mode not in ("threads", "processes"):
         raise ValueError(f"exec_mode must be 'threads' or 'processes', got {exec_mode!r}")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    driver_mem = driver_memory()
     # multi-MB Arrow record batches of blob columns allocate as G1
     # "humongous" objects at the default region size, and with many
     # concurrent pandas-UDF tasks that thrashes the collector (measured:

@@ -1231,7 +1231,7 @@ def _qc_trained_duck() -> str:
     """
 
 
-@register("quality_classifier_trained", _qc_trained_duck())
+@register("quality_classifier_trained", _qc_trained_duck)
 def quality_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashed linear quality classifier with REAL trained weights (the
     committed perceptron fixture) instead of the Knuth formula — same

@@ -94,6 +94,9 @@ def main() -> None:
             )
         n_pass += green
         results[name] = row
+        # entries persist frames (phash pairs, IVF-PQ queries) and never
+        # release them; drop them so blocks do not pile up across entries
+        spark.catalog.clearCache()
         print(f"{'PASS' if green else 'FAIL'} {name} ({row['sec']}s)", flush=True)
 
     out = {

@@ -6,7 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_gang_spark.checkpoint import (
+    CHECKPOINT_SCHEMA,
+    MANIFEST_NAME,
+    _part_file_stats,
     checkpoint_table,
+    done_part_ids,
     load_output,
     run_extraction,
     with_part_id,
@@ -172,3 +176,99 @@ def test_manifest_missing_keys_compare_against_defaults(tmp_path):
             cp, {**opts, "pack_rule": 2},
             defaults={"on_error": "fail", "pack_rule": 1},
         )
+
+
+def test_done_part_ids_on_fresh_ledger_starts_no_job(spark, tmp_path):
+    """A ledger dir holding only the run manifest (every fresh run) is
+    answered from the listing: no Spark job.  Once the ledger holds a
+    data file the same call does run a job, so the probe can see one."""
+    import json
+    import os
+
+    cp = str(tmp_path / "cp")
+    os.makedirs(cp)
+    with open(os.path.join(cp, MANIFEST_NAME), "w") as f:
+        json.dump({"n_parts": N_PARTS}, f)
+    sc = spark.sparkContext
+
+    sc.setJobGroup("fresh-ledger", "fresh-ledger")
+    try:
+        assert done_part_ids(spark, cp, N_PARTS) == set()
+        assert done_part_ids(spark, str(tmp_path / "missing"), N_PARTS) == set()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("fresh-ledger")) == []
+
+    spark.createDataFrame(
+        [(3, N_PARTS, 1, 1, 1, 0, "done", "r"),
+         (5, N_PARTS * 2, 1, 1, 1, 0, "done", "r")], CHECKPOINT_SCHEMA,
+    ).write.mode("append").parquet(cp)
+    sc.setJobGroup("filled-ledger", "filled-ledger")
+    try:
+        # the entry from another n_parts is ignored
+        assert done_part_ids(spark, cp, N_PARTS) == {3}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("filled-ledger"))
+
+
+def test_mixed_ledger_reads_back_and_resumes(spark, corpus, tmp_path):
+    """A ledger written partly by Spark (older runs appended through a
+    DataFrame write) and partly by the driver reads back as one table
+    with exactly CHECKPOINT_SCHEMA, and a resume skips both files'
+    parts."""
+    import os
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    docs, media = corpus
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    bc = broadcast_weights(spark)
+    docs_p = with_part_id(docs, N_PARTS)
+
+    # driver-written file: a run over the docs of parts 0..3
+    run_extraction(spark, docs_p.where(F.col("part_id") < 4).drop("part_id"),
+                   media, out, cp, n_parts=N_PARTS, run_id="driver",
+                   weights_bc=bc)
+    driver_files = {f for f in os.listdir(cp) if f.endswith(".parquet")}
+    assert len(driver_files) == 1
+    driver_parts = done_part_ids(spark, cp, N_PARTS)
+    assert driver_parts and all(p < 4 for p in driver_parts)
+
+    # Spark-written file: the ledger row of part 4 from a separate run
+    other_cp = str(tmp_path / "other_cp")
+    run_extraction(spark, docs_p.where(F.col("part_id") == 4).drop("part_id"),
+                   media, str(tmp_path / "other_out"), other_cp,
+                   n_parts=N_PARTS, run_id="spark", weights_bc=bc)
+    spark.createDataFrame(
+        checkpoint_table(spark, other_cp).collect(), CHECKPOINT_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(cp)
+    spark_files = {f for f in os.listdir(cp) if f.endswith(".parquet")} - driver_files
+    assert len(spark_files) == 1
+
+    table = checkpoint_table(spark, cp)
+    assert table.schema == _parse_datatype_string(CHECKPOINT_SCHEMA)
+    assert {r.run_id for r in table.collect()} == {"driver", "spark"}
+    skipped = done_part_ids(spark, cp, N_PARTS)
+    assert skipped == driver_parts | {4}
+
+    resumed = run_extraction(spark, docs, media, out, cp, n_parts=N_PARTS,
+                             run_id="resume", weights_bc=bc)
+    resumed_parts = {r.part_id for r in checkpoint_table(spark, cp)
+                     .where(F.col("run_id") == "resume").collect()}
+    assert resumed_parts and resumed_parts.isdisjoint(skipped)
+    assert resumed.n_docs == docs_p.where(
+        ~F.col("part_id").isin(sorted(skipped))).count()
+
+
+def test_one_file_per_written_part(spark, corpus, tmp_path):
+    """The part write spreads parts over the task slots but keeps each
+    part in one task: exactly one parquet file per written part_id,
+    and the ledger names exactly the written parts."""
+    docs, media = corpus
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    run_extraction(spark, docs, media, out, cp, n_parts=N_PARTS,
+                   weights_bc=broadcast_weights(spark))
+    stats = _part_file_stats(out)
+    assert stats and all(n == 1 for n, _ in stats.values())
+    assert set(stats) == done_part_ids(spark, cp, N_PARTS)

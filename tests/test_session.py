@@ -1,0 +1,45 @@
+"""Session sizing comes from the host, and the package imports the way
+executors ship it (the --py-files zip)."""
+
+import os
+import subprocess
+import sys
+
+from ocr_gang_spark import session
+
+
+def _ram_mb() -> int:
+    with open("/proc/meminfo") as f:
+        return next(int(ln.split()[1]) // 1024 for ln in f
+                    if ln.startswith("MemTotal:"))
+
+
+def test_default_driver_heap_is_at_most_half_of_ram(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    mem = session.driver_memory()
+    assert mem.endswith("m")
+    assert int(mem[:-1]) <= _ram_mb() // 2
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session.driver_memory() == "3g"
+
+
+def test_textops_imports_from_package_zip(tmp_path):
+    """Executors import the package from the zip, where fixture paths
+    do not exist: importing the query modules must not read a fixture
+    (quality_classifier_trained's oracle used to at import time)."""
+    zip_path = session._package_zip()
+    code = (
+        "import sys; sys.path[0] = sys.argv[1]; "
+        "import ocr_gang_spark.textops as t, ocr_gang_spark.contract; "
+        "assert t.__file__.startswith(sys.argv[1]), t.__file__"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    try:
+        proc = subprocess.run(
+            [sys.executable, "-c", code, zip_path], cwd=tmp_path, env=env,
+            capture_output=True, text=True, timeout=300,
+        )
+    finally:
+        os.unlink(zip_path)
+    assert proc.returncode == 0, proc.stderr[-2000:]
