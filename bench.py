@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Bench harness (driver contract): headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the CPUs in the affinity mask);
+prints ONE JSON line.
 
 Queries are materialized with a noop-format write (full execution, no
 driver collect).  The flagship extraction also reports docs/sec — the
@@ -39,7 +40,7 @@ from ocr_gang_spark.hostprobe import (  # noqa: E402
     steal_probe,
 )
 from ocr_gang_spark.pipeline import broadcast_weights, extract_documents  # noqa: E402
-from ocr_gang_spark.session import get_spark  # noqa: E402
+from ocr_gang_spark.session import get_spark, task_slots  # noqa: E402
 from ocr_gang_spark.synth import synth_documents, synth_media  # noqa: E402
 
 HEADLINE = [
@@ -158,7 +159,7 @@ def materialize(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = task_slots()
     # 40k docs (~120k media blobs): the measured ~12.6s fixed share
     # (planning, commit, metrics) stays under 10% of the timed run even
     # at contended throughput, so docs/sec reflects the engine, not the
@@ -188,10 +189,11 @@ def main() -> None:
     # window and the round's headline was unadjudicable).  interval=10
     # matches the r4 sampler cadence so per-query timings stay
     # round-comparable; the sampler's own cost is one core at <=50%
-    # duty (<=1.6% of this box), and samples taken during the local[32]
-    # queries necessarily include the bench's OWN load — the gates
-    # below are evaluated on the extract_synth window (local[8], 16/32
-    # cores busy), where the probe reads genuine external contention.
+    # duty, and samples taken during the full-width headline queries
+    # necessarily include the bench's OWN load — the gates below are
+    # evaluated on the extract_synth window (local[extract_cpus]),
+    # where on a host wider than EXTRACT_CPUS the probe reads genuine
+    # external contention.
     with ProbeSampler(interval=10.0) as ps:
         for name in HEADLINE:
             t0 = time.time()

@@ -1,4 +1,4 @@
-"""Host-contention probe shared by bench.py and scripts/scaling_bench.py.
+"""Host-contention probe shared by bench.py and perfbench.
 
 A fixed single-core NumPy loop is timed repeatedly; on an unloaded guest
 the duration is constant (~0.2s on this box), and host CPU steal
@@ -14,7 +14,7 @@ import threading
 import time
 
 # a run whose mean in-run probe exceeds this is not a quiet-window
-# measurement (same threshold as scripts/scaling_bench.py --quiet-probe)
+# measurement (bench.py reports it as the ``quiet`` flag)
 QUIET_PROBE_SEC = 0.8
 
 # the stricter gate a COMMITTED HEADLINE docs/sec claim must meet

@@ -41,9 +41,19 @@ def binarize(rgb: np.ndarray) -> np.ndarray:
     """
     # exact rewrite of the C semantics with minimal memory traffic:
     # (r+g+b)/3 >= 180 (truncating int division, non-negative operands)
-    # <=> r+g+b >= 540; the channel sum fits uint16 (max 765)
-    s = rgb.sum(axis=2, dtype=np.uint16)
+    # <=> r+g+b >= 540
+    s = channel_sum(rgb)
     return np.where(s >= 3 * BW_THRESHOLD, np.uint8(255), np.uint8(0))
+
+
+def channel_sum(rgb: np.ndarray) -> np.ndarray:
+    """``r + g + b`` of an (h, w, 3) page as (h, w) uint16 (max 765),
+    equal to ``rgb.sum(axis=2, dtype=np.uint16)``.  Two whole-plane
+    adds instead of NumPy's reduction over the length-3 inner axis,
+    which is several times slower per page."""
+    r, g, b = np.moveaxis(rgb, -1, 0)
+    s = np.add(r, g, dtype=np.uint16, casting="unsafe")
+    return np.add(s, b, out=s, casting="unsafe")
 
 
 def row_marker_mask(bw: np.ndarray) -> np.ndarray:

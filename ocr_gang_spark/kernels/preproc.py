@@ -38,13 +38,14 @@ from typing import List, Tuple
 
 import numpy as np
 
+from .image_ops import channel_sum
+
 
 def gray_intdiv(rgb: np.ndarray) -> np.ndarray:
     """The reference's grayscale: ``(r+g+b)/3`` with C integer division
     (process.c:9-28), kept so Otsu thresholds are comparable 1:1 with
     the fixed BW_THRESHOLD=180.  (h, w, 3) uint8 -> (h, w) uint8."""
-    s = rgb.sum(axis=2, dtype=np.uint16)
-    return (s // 3).astype(np.uint8)
+    return (channel_sum(rgb) // 3).astype(np.uint8)
 
 
 def otsu_threshold(gray: np.ndarray) -> int:

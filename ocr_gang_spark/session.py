@@ -47,6 +47,12 @@ def driver_memory() -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(512, ram_mb // 2)}m"
 
 
+def task_slots() -> int:
+    """SPARK_GRAFT_CPUS, else the CPUs in this process's affinity mask."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def stage_tasks(spark: SparkSession) -> int:
     """Explicit task count for a stage AQE must not coalesce by bytes:
     the CPU-bound OCR stage, and the partitioned write that should
@@ -63,8 +69,7 @@ def get_spark(
     exec_mode: str | None = None,
 ) -> SparkSession:
     if cpus is None:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        cpus = int(env) if env else len(os.sched_getaffinity(0))
+        cpus = task_slots()
     exec_mode = exec_mode or os.environ.get("SPARK_GRAFT_EXEC_MODE", "threads")
     if exec_mode not in ("threads", "processes"):
         raise ValueError(f"exec_mode must be 'threads' or 'processes', got {exec_mode!r}")

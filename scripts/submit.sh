@@ -1,14 +1,17 @@
 #!/bin/bash
 # spark-submit deployment (north_rule: --py-files packaging, multi-executor).
 # Usage: scripts/submit.sh [--job extract|curate|mmcurate] [job args...]
-#        (env: SPARK_GRAFT_CPUS=32)
+#        (env: SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM; unset, task slots
+#        come from the CPU affinity mask and the driver heap is half of
+#        RAM, as in ocr_gang_spark/session.py)
 set -euo pipefail
 JOB="extract"
 if [ "${1:-}" = "--job" ]; then
   JOB="$2"; shift 2
 fi
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
-CPUS="${SPARK_GRAFT_CPUS:-32}"
+read -r CPUS DRIVER_MEM < <(cd "$ROOT" && python -c \
+  'from ocr_gang_spark.session import driver_memory, task_slots; print(task_slots(), driver_memory())')
 # SPARK_GRAFT_EXEC_MODE=processes -> local-cluster[N,1,M]: N separate
 # single-core executor JVMs (the honest N-executors configuration)
 if [ "${SPARK_GRAFT_EXEC_MODE:-threads}" = "processes" ]; then
@@ -33,7 +36,7 @@ exec spark-submit \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \
   --conf spark.sql.execution.arrow.maxRecordsPerBatch=512 \
-  --conf spark.driver.memory="${SPARK_GRAFT_DRIVER_MEM:-32g}" \
+  --conf spark.driver.memory="$DRIVER_MEM" \
   --conf spark.ui.enabled=false \
   --py-files "$ZIP" \
   "$ROOT/jobs/${JOB}_job.py" \

@@ -74,9 +74,7 @@ def sweep_one(spark, con, fn, sql, sf_dir):
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.01")
     round_tag = os.environ.get("SPARK_GRAFT_SWEEP_ROUND", "r5")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-    spark = get_spark("sweep", cpus=cpus)
+    spark = get_spark("sweep")
     con = duck_connection(sf_dir)
     qs, oracles = queries(), oracle_sql()
 

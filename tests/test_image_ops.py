@@ -9,6 +9,7 @@ import pytest
 
 from ocr_gang_spark.kernels.image_ops import (
     binarize,
+    channel_sum,
     char_items,
     col_marker_mask,
     glyph_to_matrix,
@@ -38,6 +39,22 @@ class TestBinarize:
     def test_extremes(self):
         img = rgb([[(0, 0, 0), (255, 255, 255), (180, 180, 180)]])
         assert binarize(img).tolist() == [[0, 255, 255]]
+
+    def test_channel_sum_matches_axis_reduction(self):
+        # binarize and preproc.gray_intdiv read the page through
+        # channel_sum; it must equal the uint16 reduction it replaced,
+        # on random pages and at the sums around the 540 threshold and
+        # the 765 maximum
+        rng = np.random.default_rng(7)
+        pages = [rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+                 for h, w in ((1, 1), (37, 53), (120, 300))]
+        pages.append(rgb([[(179, 180, 180), (180, 180, 180), (255, 255, 255)]]))
+        for page in pages:
+            got = channel_sum(page)
+            want = page.sum(axis=2, dtype=np.uint16)
+            assert got.dtype == want.dtype and got.shape == want.shape
+            assert np.array_equal(got, want)
+        assert channel_sum(pages[-1]).tolist() == [[539, 540, 765]]
 
 
 class TestMarkers:

@@ -239,3 +239,47 @@ def test_span_input_order_invariance(spark):
             "doc_id", "spans").collect())
     )
     assert ordered == shuffled
+
+
+def test_reused_workers_hold_no_zip_finders(spark):
+    """Each Python task starts with importlib.invalidate_caches(), which
+    re-reads the archive of every cached zipimporter (pyspark.zip, the
+    py4j zip, the spark-core jar): ~0.2 s per task.  After a warm
+    extraction pass, a worker reused for the next task must hold no
+    zipimporter in sys.path_importer_cache.
+
+    A worker-only env var gives this test its own Python worker pool
+    (pools are keyed by the function's env), so every reused worker the
+    probe meets last ran an extraction task."""
+    sc = spark.sparkContext
+    sc.environment["OCR_GANG_ZIP_FINDER_PROBE"] = "1"
+    try:
+        docs = synth_documents(spark, 12, seed=21, skew_frac=0.0)
+        media = synth_media(spark, docs)
+        bc = broadcast_weights(spark)
+        for _ in range(2):  # the second pass runs on reused workers
+            extract_documents(docs, media, bc).write.format("noop").mode(
+                "overwrite").save()
+
+        def probe(batches):
+            import sys
+            import zipimport
+
+            import pandas as pd
+
+            n_zip = sum(isinstance(f, zipimport.zipimporter)
+                        for f in sys.path_importer_cache.values())
+            # both extraction UDFs import html_strip when unpickled
+            reused = "ocr_gang_spark.kernels.html_strip" in sys.modules
+            for _ in batches:
+                pass
+            yield pd.DataFrame({"reused": [reused], "n_zip": [n_zip]})
+
+        n_slots = sc.defaultParallelism
+        rows = spark.range(n_slots, numPartitions=n_slots).mapInPandas(
+            probe, "reused boolean, n_zip long").collect()
+    finally:
+        del sc.environment["OCR_GANG_ZIP_FINDER_PROBE"]
+    reused = [r.n_zip for r in rows if r.reused]
+    assert reused, rows
+    assert reused == [0] * len(reused), rows

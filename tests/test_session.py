@@ -43,3 +43,43 @@ def test_textops_imports_from_package_zip(tmp_path):
     finally:
         os.unlink(zip_path)
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_zip_finder_drop_keeps_lazy_imports_working(tmp_path):
+    """pipeline._drop_zip_finders runs at the start of every extraction
+    UDF.  With the package imported from the --py-files zip, it must
+    leave no zipimporter cached, and a module first imported after it
+    (decode_media_blob's lazy kernels.png) must still load from the zip."""
+    import numpy as np
+
+    from ocr_gang_spark.kernels.png import encode_png
+
+    page = np.random.default_rng(3).integers(0, 256, (5, 7, 3), dtype=np.uint8)
+    blob = tmp_path / "page.png"
+    blob.write_bytes(encode_png(page))
+    np.save(tmp_path / "page.npy", page)
+    zip_path = session._package_zip()
+    code = (
+        "import sys, zipimport; sys.path[0] = sys.argv[1]\n"
+        "import numpy as np\n"
+        "from ocr_gang_spark import pipeline\n"
+        "assert pipeline.__file__.startswith(sys.argv[1]), pipeline.__file__\n"
+        "assert 'ocr_gang_spark.kernels.png' not in sys.modules\n"
+        "pipeline._drop_zip_finders()\n"
+        "left = [p for p, f in sys.path_importer_cache.items()\n"
+        "        if isinstance(f, zipimport.zipimporter)]\n"
+        "assert not left, left\n"
+        "got = pipeline.decode_media_blob(open('page.png', 'rb').read())\n"
+        "assert np.array_equal(got, np.load('page.npy'))\n"
+        "assert sys.modules['ocr_gang_spark.kernels.png'].__file__"
+        ".startswith(sys.argv[1])\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    try:
+        proc = subprocess.run(
+            [sys.executable, "-c", code, zip_path], cwd=tmp_path, env=env,
+            capture_output=True, text=True, timeout=300,
+        )
+    finally:
+        os.unlink(zip_path)
+    assert proc.returncode == 0, proc.stderr[-2000:]
