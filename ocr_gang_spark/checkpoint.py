@@ -14,9 +14,11 @@ curation.run_curation and stage M of mm_curation.run_mm_curation:
   ``~part_id.isin(done)``;
 * commit_parts writes the rest partitionBy(part_id) with dynamic
   partition overwrite => re-running a part is idempotent (exactly-once
-  per part), aggregates per-part metrics from the *written* files
-  (cheap columnar scan, also validates the write), and the driver
-  appends them to the ledger as one parquet file with run_id lineage.
+  per part); the driver then reads the new parts' *written* files
+  directly — row counts from the parquet footers, each ledger sum from
+  its one column, no Spark job (reading them also validates the
+  write) — and appends the per-part rows to the ledger as one parquet
+  file with run_id lineage.
 
 A killed run leaves some parts absent from the ledger; the next
 invocation processes exactly those.  Iceberg note: on a real cluster
@@ -36,8 +38,10 @@ import uuid
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import broadcast_weights, extract_documents
@@ -106,13 +110,15 @@ def commit_parts(
     run_id: str,
     t0: float,
     schema: str,
-    sums: dict[str, Column],
+    sums: dict[str, pc.Expression],
 ) -> tuple[int, int, int]:
     """Write ``parts`` (rows whose part_id is not in ``done_ids``) to
     output_dir and append a ledger row (``schema``) per written part:
-    n_docs plus ``sums``, each ledger column's aggregate over the part's
-    written rows.  Returns (parts written, docs written, wall_ms up to
-    the write); empty input writes no part file and no ledger row.
+    n_docs plus ``sums``, each ledger column's total of a pyarrow
+    expression over the part's written rows (NULLs skipped, NULL when
+    no row has a value — ``F.sum``'s semantics).  Returns (parts
+    written, docs written, wall_ms up to the write); empty input writes
+    no part file and no ledger row.
 
     The explicit task count stops AQE coalescing the small output into
     one task that commits every part file in turn; each part still
@@ -122,26 +128,30 @@ def commit_parts(
     writes.  Every part dir outside ``done_ids`` is
     attributed to this run: with immutable inputs across resumes
     (ADVICE r1), an orphan part from a crashed run is exactly the data
-    this run would have produced."""
+    this run would have produced.
+
+    The ledger rows come from the new parts' files, read on the driver:
+    n_docs from their parquet footers, each sum from its column alone.
+    A Spark read-back of output_dir costs ~1 s per call in 4 more jobs,
+    one of which lists every part dir, so its cost grows with the
+    output already written; a torn file fails this read as it would
+    fail that one."""
     parts.repartition(stage_tasks(spark), "part_id").write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("part_id").parquet(output_dir)
     wall_ms = int((time.time() - t0) * 1000)
-    new_ids = sorted(set(_part_file_stats(output_dir)) - done_ids)
-    if not new_ids:
+    files = _part_files(output_dir)
+    rows = []
+    for pid in sorted(set(files) - done_ids):
+        part = pads.dataset(files[pid], format="parquet")
+        totals = part.to_table(columns=sums)
+        rows.append({
+            "part_id": pid, "n_parts": n_parts, "n_docs": part.count_rows(),
+            **{c: pc.sum(totals[c]).as_py() for c in sums},
+            "wall_ms": wall_ms, "status": "done", "run_id": run_id,
+        })
+    if not rows:
         return 0, 0, wall_ms
-    metrics = (
-        spark.read.parquet(output_dir)
-        .where(F.col("part_id").isin(new_ids))
-        .groupBy("part_id")
-        .agg(F.count("*").alias("n_docs"), *(agg.alias(c) for c, agg in sums.items()))
-        .collect()
-    )
-    rows = [
-        {**m.asDict(), "n_parts": n_parts, "wall_ms": wall_ms,
-         "status": "done", "run_id": run_id}
-        for m in metrics
-    ]
     _append_ledger(checkpoint_dir, rows, schema)
     return len(rows), sum(r["n_docs"] for r in rows), wall_ms
 
@@ -269,7 +279,7 @@ def run_extraction(
     return RunResult(run_id, *commit_parts(
         spark, out, output_dir, checkpoint_dir, n_parts=n_parts,
         done_ids=done_ids, run_id=run_id, t0=t0, schema=CHECKPOINT_SCHEMA,
-        sums={"n_spans_out": F.sum("n_spans"), "n_chars_out": F.sum("n_chars")},
+        sums={"n_spans_out": pc.field("n_spans"), "n_chars_out": pc.field("n_chars")},
     ))
 
 
@@ -285,26 +295,34 @@ class CompactResult:
 COMPACTION_LOG = "_compactions.json"
 
 
-def _part_file_stats(output_dir: str) -> dict[int, tuple[int, int]]:
-    """{part_id: (n_files, total_bytes)} from the directory listing —
-    metadata only, no data scan.  On a real cluster this is the Iceberg
-    manifest read (data_files per partition); local-FS walk is the
-    sandbox stand-in, same as the run manifest."""
-    stats: dict[int, tuple[int, int]] = {}
+def _part_files(output_dir: str) -> dict[int, list[str]]:
+    """{part_id: [paths of its .parquet files]} from the directory
+    listing, for every part dir holding at least one — metadata only,
+    no data scan.  On a real cluster this is the Iceberg manifest read
+    (data_files per partition); local-FS walk is the sandbox stand-in,
+    same as the run manifest."""
+    files: dict[int, list[str]] = {}
     if not os.path.isdir(output_dir):
-        return stats
+        return files
     for name in os.listdir(output_dir):
         if not name.startswith("part_id="):
             continue
-        pid = int(name.split("=", 1)[1])
-        n, b = 0, 0
-        for f in os.listdir(os.path.join(output_dir, name)):
-            if f.endswith(".parquet"):
-                n += 1
-                b += os.path.getsize(os.path.join(output_dir, name, f))
-        if n:
-            stats[pid] = (n, b)
-    return stats
+        part_dir = os.path.join(output_dir, name)
+        paths = [
+            os.path.join(part_dir, f)
+            for f in sorted(os.listdir(part_dir)) if f.endswith(".parquet")
+        ]
+        if paths:
+            files[int(name.split("=", 1)[1])] = paths
+    return files
+
+
+def _part_file_stats(output_dir: str) -> dict[int, tuple[int, int]]:
+    """{part_id: (n_files, total_bytes)} of ``_part_files``."""
+    return {
+        pid: (len(paths), sum(os.path.getsize(p) for p in paths))
+        for pid, paths in _part_files(output_dir).items()
+    }
 
 
 def compact_output(
@@ -389,12 +407,12 @@ def compact_output(
         "part_id"
     ).parquet(output_dir)
 
-    after = _part_file_stats(output_dir)
-    n_after = (
-        spark.read.parquet(output_dir)
-        .where(F.col("part_id").isin(pids))
-        .count()
-    )
+    # row counts from the compacted parts' footers: a Spark read of
+    # output_dir would list every part dir of the table to check a few
+    after = _part_files(output_dir)
+    n_after = pads.dataset(
+        [p for pid in pids for p in after.get(pid, [])], format="parquet"
+    ).count_rows()
     if n_after != n_before:
         raise RuntimeError(
             f"compaction row-count mismatch on parts {pids}: "
@@ -402,7 +420,7 @@ def compact_output(
         )
 
     files_before = sum(n for n, _ in todo.values())
-    files_after = sum(after.get(pid, (0, 0))[0] for pid in pids)
+    files_after = sum(len(after.get(pid, [])) for pid in pids)
     entry = {
         "run_id": run_id,
         "ts": int(time.time() * 1000),

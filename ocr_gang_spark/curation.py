@@ -36,6 +36,7 @@ import os
 import time
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -207,7 +208,7 @@ def run_curation(
         ),
         output_dir, checkpoint_dir, n_parts=n_parts, done_ids=done_ids,
         run_id=run_id, t0=t0, schema=CURATION_CHECKPOINT_SCHEMA,
-        sums={"n_tokens_out": F.sum("n_tokens")},
+        sums={"n_tokens_out": pc.field("n_tokens")},
     )
     return CurationResult(
         run_id, n_done, n_docs, tallies.get("quality", 0),

@@ -38,6 +38,7 @@ import os
 import time
 from dataclasses import dataclass
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -239,6 +240,7 @@ def run_mm_curation(
         os.path.join(workdir, "shards"), cp_dir, n_parts=n_parts,
         done_ids=done_ids, run_id=run_id, t0=t0,
         schema=MM_CHECKPOINT_SCHEMA,
-        sums={"n_chars_out": F.sum(F.length("rendered"))},
+        # code points, as Spark's length() counts a string
+        sums={"n_chars_out": pc.utf8_length(pc.field("rendered"))},
     )
     return MMCurationResult(run_id, n_done, n_docs, n_rejected, n_bins, wall_ms)

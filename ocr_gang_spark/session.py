@@ -10,7 +10,8 @@ Two execution modes (SPARK_GRAFT_EXEC_MODE or the exec_mode param):
 
 * ``threads`` (default) — ``local[N]``: N task threads in one JVM.
 * ``processes`` — ``local-cluster[N,1,M]``: N SEPARATE single-core
-  executor JVMs, each with its own python workers, heap, and a real
+  executor JVMs (M MB each, ``executor_memory_mb``; override with
+  SPARK_GRAFT_EXEC_MEM_MB), each with its own python workers, heap, and a real
   netty shuffle between processes.  This is the honest stand-in for
   "N executors vs 4N executors" in the north rule's scaling criterion:
   executors are isolated OS processes exactly as on a real cluster,
@@ -20,6 +21,7 @@ Two execution modes (SPARK_GRAFT_EXEC_MODE or the exec_mode param):
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -39,12 +41,36 @@ def build_session(
     return get_spark(app_name, cpus=cpus, exec_mode=exec_mode)
 
 
+def _ram_mb() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+
+
 def driver_memory() -> str:
     """SPARK_GRAFT_DRIVER_MEM, else half of physical RAM: the JVM heap
     may grow to this size, and a heap past RAM gets the JVM OOM-killed
     partway through a run (the old 32g default on a 15 GB host)."""
-    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
-    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(512, ram_mb // 2)}m"
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(512, _ram_mb() // 2)}m"
+
+
+# JVM size suffixes in MiB; Spark reads a bare driver-memory number as MiB
+_MB_PER_UNIT = {"": 1, "k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def executor_memory_mb(slots: int) -> int:
+    """SPARK_GRAFT_EXEC_MEM_MB, else the RAM left after the driver heap,
+    split over the ``slots`` single-core executor JVMs of processes
+    mode (floor 512).  The old 3072 MB constant put 4 executors plus a
+    half-RAM driver heap past RAM on a 15 GB host."""
+    env = os.environ.get("SPARK_GRAFT_EXEC_MEM_MB")
+    if env:
+        return int(env)
+    heap = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_memory().lower())
+    if heap is None:
+        raise ValueError(
+            f"driver heap {driver_memory()!r} is not a JVM size such as 4g or 4096m"
+        )
+    driver_mb = int(int(heap[1]) * _MB_PER_UNIT[heap[2]])
+    return max(512, (_ram_mb() - driver_mb) // max(1, slots))
 
 
 def task_slots() -> int:
@@ -80,7 +106,7 @@ def get_spark(
     # JVM GC 107.6 core-s at local[16] vs 1.0 at local[4] on the same job)
     g1_opt = "-XX:G1HeapRegionSize=32m"
     if exec_mode == "processes":
-        exec_mem_mb = int(os.environ.get("SPARK_GRAFT_EXEC_MEM_MB", "3072"))
+        exec_mem_mb = executor_memory_mb(cpus)
         master = f"local-cluster[{cpus},1,{exec_mem_mb}]"
     else:
         master = f"local[{cpus}]"

@@ -1,25 +1,26 @@
 #!/bin/bash
 # spark-submit deployment (north_rule: --py-files packaging, multi-executor).
 # Usage: scripts/submit.sh [--job extract|curate|mmcurate] [job args...]
-#        (env: SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM; unset, task slots
-#        come from the CPU affinity mask and the driver heap is half of
-#        RAM, as in ocr_gang_spark/session.py)
+#        (env: SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM,
+#        SPARK_GRAFT_EXEC_MEM_MB; unset, task slots come from the CPU
+#        affinity mask, the driver heap is half of RAM and each
+#        processes-mode executor gets the rest split over the slots, as
+#        in ocr_gang_spark/session.py)
 set -euo pipefail
 JOB="extract"
 if [ "${1:-}" = "--job" ]; then
   JOB="$2"; shift 2
 fi
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
-read -r CPUS DRIVER_MEM < <(cd "$ROOT" && python -c \
-  'from ocr_gang_spark.session import driver_memory, task_slots; print(task_slots(), driver_memory())')
+read -r CPUS DRIVER_MEM EXEC_MEM_MB < <(cd "$ROOT" && python -c \
+  'from ocr_gang_spark.session import driver_memory, executor_memory_mb, task_slots as t; print(t(), driver_memory(), executor_memory_mb(t()))')
 # SPARK_GRAFT_EXEC_MODE=processes -> local-cluster[N,1,M]: N separate
 # single-core executor JVMs (the honest N-executors configuration)
 if [ "${SPARK_GRAFT_EXEC_MODE:-threads}" = "processes" ]; then
-  MEM_MB="${SPARK_GRAFT_EXEC_MEM_MB:-3072}"
-  MASTER="local-cluster[$CPUS,1,$MEM_MB]"
+  MASTER="local-cluster[$CPUS,1,$EXEC_MEM_MB]"
   # ActiveProcessorCount: stop each 1-core executor JVM sizing its
   # GC/JIT pools for the host's core count (see session.py)
-  EXEC_CONF=(--conf "spark.executor.memory=${MEM_MB}m"
+  EXEC_CONF=(--conf "spark.executor.memory=${EXEC_MEM_MB}m"
              --conf "spark.executor.extraJavaOptions=-XX:G1HeapRegionSize=32m -XX:ActiveProcessorCount=2")
 else
   MASTER="local[$CPUS]"

@@ -2,19 +2,27 @@
 process only the remainder and produce output identical to a clean run
 (FIXTURES.md §6)."""
 
+import os
+import time
+
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from ocr_gang_spark.checkpoint import (
     CHECKPOINT_SCHEMA,
     MANIFEST_NAME,
     _part_file_stats,
     checkpoint_table,
+    commit_parts,
     done_part_ids,
     load_output,
     run_extraction,
     with_part_id,
 )
+from ocr_gang_spark.curation import CURATION_CHECKPOINT_SCHEMA
+from ocr_gang_spark.mm_curation import MM_CHECKPOINT_SCHEMA
 from ocr_gang_spark.pipeline import broadcast_weights
 from ocr_gang_spark.synth import synth_documents, synth_media
 
@@ -219,8 +227,6 @@ def test_mixed_ledger_reads_back_and_resumes(spark, corpus, tmp_path):
     parts."""
     import os
 
-    from pyspark.sql.types import _parse_datatype_string
-
     docs, media = corpus
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
     bc = broadcast_weights(spark)
@@ -272,3 +278,90 @@ def test_one_file_per_written_part(spark, corpus, tmp_path):
     stats = _part_file_stats(out)
     assert stats and all(n == 1 for n, _ in stats.values())
     assert set(stats) == done_part_ids(spark, cp, N_PARTS)
+
+
+# the three callers' sum shapes: int and long columns summed, and a
+# string column's length in code points (Spark aggregates built lazily:
+# a Column needs the session)
+@pytest.mark.parametrize("schema,sums,aggs", [
+    (CHECKPOINT_SCHEMA,
+     {"n_spans_out": pc.field("n_int"), "n_chars_out": pc.field("n_long")},
+     lambda: [F.sum("n_int"), F.sum("n_long")]),
+    (CURATION_CHECKPOINT_SCHEMA,
+     {"n_tokens_out": pc.field("n_long")}, lambda: [F.sum("n_long")]),
+    (MM_CHECKPOINT_SCHEMA,
+     {"n_chars_out": pc.utf8_length(pc.field("rendered"))},
+     lambda: [F.sum(F.length("rendered"))]),
+], ids=["extraction", "curation", "mm"])
+def test_ledger_matches_spark_aggregate(spark, tmp_path, schema, sums, aggs):
+    """The driver-built ledger rows equal Spark's count/sum over the same
+    written output, NULL handling included (part 1 holds only NULLs), and
+    the ledger reads back with exactly the caller's schema."""
+    parts = spark.createDataFrame(
+        [("a", 0, 3, 10, "na\u00efve \u2603"), ("b", 0, None, 1 << 40, None),
+         ("c", 0, 2, 5, "\U0001d518x \u00e9"), ("d", 1, None, None, None)],
+        "doc_id string, part_id int, n_int int, n_long long, rendered string",
+    )
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    os.makedirs(cp)  # the callers' run manifest makes it
+    assert commit_parts(
+        spark, parts, out, cp, n_parts=N_PARTS, done_ids=set(), run_id="r",
+        t0=time.time(), schema=schema, sums=sums,
+    )[:2] == (2, 4)
+
+    ledger = spark.read.parquet(cp)
+    assert ledger.schema == _parse_datatype_string(schema)
+    expected = (
+        spark.read.parquet(out).groupBy("part_id")
+        .agg(F.count("*").alias("n_docs"),
+             *(a.alias(c) for c, a in zip(sums, aggs())))
+        .select(F.lit(N_PARTS).alias("n_parts"), "*",
+                F.lit("done").alias("status"), F.lit("r").alias("run_id"))
+    )
+    cols = ["part_id", "n_parts", "n_docs", *sums, "status", "run_id"]
+    assert sorted(ledger.select(cols).collect()) == sorted(
+        expected.select(cols).collect())
+
+
+def test_commit_parts_starts_no_job_after_write(spark, tmp_path):
+    """Past 32 part dirs a Spark read of the output starts a parallel
+    'Listing leaf files' job; the ledger rows come from the written
+    files on the driver instead, so committing into a large output runs
+    exactly the jobs of the write itself."""
+    df = spark.range(200).select(
+        F.col("id").cast("string").alias("doc_id"),
+        (F.col("id") % 40).cast("int").alias("part_id"),
+        F.col("id").cast("int").alias("n_spans"),
+        F.lit(1).cast("long").alias("n_chars"),
+    )
+    new = df.where(F.col("part_id") >= 36)
+    sums = {"n_spans_out": pc.field("n_spans"), "n_chars_out": pc.field("n_chars")}
+    sc = spark.sparkContext
+
+    def jobs(group, out, done_ids):
+        (tmp_path / group).mkdir()
+        sc.setJobGroup(group, group)
+        try:
+            res = commit_parts(
+                spark, new, out, str(tmp_path / group), n_parts=64,
+                done_ids=done_ids, run_id=group, t0=time.time(),
+                schema=CHECKPOINT_SCHEMA, sums=sums,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return res[:2], len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # the write's own jobs: every written part is already done, so the
+    # call commits no ledger row
+    committed, n_write = jobs("write-only", str(tmp_path / "w"), set(range(64)))
+    assert committed == (0, 0) and n_write
+
+    out = str(tmp_path / "out")
+    (tmp_path / "cp0").mkdir()
+    commit_parts(
+        spark, df.where(F.col("part_id") < 36), out, str(tmp_path / "cp0"),
+        n_parts=64, done_ids=set(), run_id="first", t0=time.time(),
+        schema=CHECKPOINT_SCHEMA, sums=sums,
+    )
+    assert len(_part_file_stats(out)) == 36
+    assert jobs("commit", out, set(range(36))) == ((4, 20), n_write)

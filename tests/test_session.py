@@ -5,6 +5,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from ocr_gang_spark import session
 
 
@@ -22,6 +24,25 @@ def test_default_driver_heap_is_at_most_half_of_ram(monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert session.driver_memory() == "3g"
+
+
+def test_default_executor_memory_fits_beside_driver_heap(monkeypatch):
+    """Processes mode: the driver heap plus one executor heap per slot
+    stays within RAM; SPARK_GRAFT_EXEC_MEM_MB still overrides."""
+    monkeypatch.delenv("SPARK_GRAFT_EXEC_MEM_MB", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    driver_mb = int(session.driver_memory()[:-1])
+    assert driver_mb + 4 * session.executor_memory_mb(4) <= _ram_mb()
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session.executor_memory_mb(2) == max(512, (session._ram_mb() - 2048) // 2)
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2 gigs")
+    with pytest.raises(ValueError, match="not a JVM size"):
+        session.executor_memory_mb(2)
+
+    monkeypatch.setenv("SPARK_GRAFT_EXEC_MEM_MB", "1536")
+    assert session.executor_memory_mb(4) == 1536
 
 
 def test_textops_imports_from_package_zip(tmp_path):
