@@ -345,7 +345,7 @@ def compact_output(
     exceeded target_bytes, which excluded exactly the resume-heavy
     fragmented partitions the operator exists for, at every possible
     target; round-4 review).  Read exactly those partitions
-    (partition-pruned scan), rewrite via one hash repartition on
+    (their part dirs only), rewrite via one hash repartition on
     (part_id, _ck) where _ck buckets doc_id into the partition's
     target file count (<= that many output files per partition, one
     for small ones), and swap with dynamic partition overwrite — the
@@ -372,7 +372,11 @@ def compact_output(
         return CompactResult(run_id, 0, 0, 0, 0)
 
     pids = sorted(todo)
-    src = spark.read.parquet(output_dir).where(F.col("part_id").isin(pids))
+    # only the picked part dirs: a read of output_dir would list every
+    # part dir of the table (a listing job past 32 dirs) to rewrite a few
+    src = spark.read.option("basePath", output_dir).parquet(
+        *[os.path.join(output_dir, f"part_id={pid}") for pid in pids]
+    )
     # _ck buckets each oversized partition's rows into its target file
     # count, via a broadcast join against the tiny (part_id, n_target)
     # table.  The first version built this as a nested CASE WHEN chain

@@ -20,6 +20,7 @@ OCR text of every blob is known by construction.
 from __future__ import annotations
 
 import hashlib
+import re
 from typing import Iterator, List
 
 import numpy as np
@@ -274,10 +275,14 @@ OCR_NOISE_EVERY = 5
 OCR_NOISE_RATE = 0.05
 
 
+_SYNTH_REF = re.compile(r"m-?\d+-doc-(\d{8,})-\d+")
+
+
 def is_degraded_ref(ref: str) -> bool:
-    """True for refs whose document is in the degraded slice
-    (ref format m{seed}-doc-{did:08d}-{i})."""
-    return int(ref.split("-")[2]) % OCR_NOISE_EVERY == 0
+    """True for synth refs (m{seed}-doc-{did:08d}-{i}) whose document is
+    in the degraded slice; False for every other ref."""
+    m = _SYNTH_REF.fullmatch(ref)
+    return m is not None and int(m.group(1)) % OCR_NOISE_EVERY == 0
 
 
 def inject_scan_noise(ref: str, bw: np.ndarray) -> np.ndarray:

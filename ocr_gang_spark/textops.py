@@ -10,7 +10,8 @@ shuffle-conscious:
 * token hashing uses md5 (bit-identical across engines/languages)
   reduced to BIGINT, so DuckDB can verify values exactly;
 * the embedding dot products are emitted as explicit left-to-right
-  64-term chains in both engines => bit-identical doubles, no rounding.
+  64-term chains in both engines => bit-identical doubles, no rounding
+  (Spark side: SQL text from ``_vec_sum_sql``, one py4j call each).
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -1503,17 +1504,35 @@ def _dot_chain_duck(e: str, q: str) -> str:
     )
 
 
-def _dot_chain_spark(e, q):
-    total = None
-    for k in range(EMB_DIM):
-        term = F.element_at(e, k + 1).cast("double") * F.element_at(q, k + 1).cast("double")
-        total = term if total is None else total + term
-    return total
+# terms of _vec_sum_sql: {x} is a's element, {y} is b's
+_DOT = "CAST({x} AS DOUBLE) * CAST({y} AS DOUBLE)"
+_QDOT = "{x} * {y}"
+_SQDIST = "({x} - {y}) * ({x} - {y})"
 
 
-def _cosine_spark(e, q):
-    return _dot_chain_spark(e, q) / (
-        F.sqrt(_dot_chain_spark(e, e)) * F.sqrt(_dot_chain_spark(q, q))
+def _vec_sum_sql(a: str, b, term: str, n: int = EMB_DIM, off: str = "") -> str:
+    """Spark SQL text of the left-to-right sum over k = 1..n of ``term``
+    at x = ``element_at(a, off + k)`` and y = ``element_at(b, k)``; a
+    list ``b`` is a literal int vector, y = its k-th value.  The one
+    Spark-side vector chain: a caller's ``F.expr`` parses it on the JVM
+    in one py4j round trip (a Column tree costs one per node).  The
+    chain is unrolled because an ``aggregate(zip_with(...))`` fold runs
+    without codegen (cosine over 300k rows at local[3]: 2.0-2.2 s
+    unrolled vs 3.5-3.6 s as that fold)."""
+    at = f"{off} + " if off else ""
+
+    def y(k: int) -> str:
+        return f"element_at({b}, {k})" if isinstance(b, str) else f"({int(b[k - 1])})"
+
+    return " + ".join(
+        term.format(x=f"element_at({a}, {at}{k})", y=y(k)) for k in range(1, n + 1)
+    )
+
+
+def _cosine_spark(e: str, q: str) -> Column:
+    return F.expr(
+        f"({_vec_sum_sql(e, q, _DOT)}) / "
+        f"(sqrt({_vec_sum_sql(e, e, _DOT)}) * sqrt({_vec_sum_sql(q, q, _DOT)}))"
     )
 
 
@@ -1541,7 +1560,7 @@ def embedding_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     return (
         emb.crossJoin(F.broadcast(q))
-        .select("vec_id", _cosine_spark(F.col("embedding"), F.col("qe")).alias("cos_sim"))
+        .select("vec_id", _cosine_spark("embedding", "qe").alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(10)
     )
@@ -1567,7 +1586,7 @@ def ann_topk_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = load(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     scored = emb.crossJoin(F.broadcast(q)).select(
-        "label", "vec_id", _cosine_spark(F.col("embedding"), F.col("qe")).alias("cos_sim")
+        "label", "vec_id", _cosine_spark("embedding", "qe").alias("cos_sim")
     )
     w = W.partitionBy("label").orderBy(F.desc("cos_sim"), "vec_id")
     return (
@@ -1616,14 +1635,14 @@ def ann_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             F.col("rep_label").alias("label"),
-            _cosine_spark(F.col("embedding"), F.col("qe")).alias("s"),
+            _cosine_spark("embedding", "qe").alias("s"),
         )
     )
     probe = rep_scored.orderBy(F.desc("s"), "label").limit(1).select("label")
     return (
         emb.join(F.broadcast(probe), "label")
         .crossJoin(F.broadcast(q))
-        .select("label", "vec_id", _cosine_spark(F.col("embedding"), F.col("qe")).alias("cos_sim"))
+        .select("label", "vec_id", _cosine_spark("embedding", "qe").alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(3)
     )
@@ -1704,7 +1723,7 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emb,) = load(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
 
-    zero = F.array(*[F.lit(0.0) for _ in range(EMB_DIM)])
+    zero = F.expr("array(" + ", ".join("0.0D" for _ in range(EMB_DIM)) + ")")
     cent = (
         emb.groupBy("label")
         .agg(
@@ -1725,7 +1744,7 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranked = (
         cent.crossJoin(F.broadcast(q))
-        .select("label", _cosine_spark(F.col("cent"), F.col("qe")).alias("cs"))
+        .select("label", _cosine_spark("cent", "qe").alias("cs"))
         .withColumn("crank", F.row_number().over(W.orderBy(F.desc("cs"), "label")))
         .where(F.col("crank") <= max(ANN_NPROBES))
         .select("label", "crank")
@@ -1735,7 +1754,7 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "label", "crank", "vec_id",
-            _cosine_spark(F.col("embedding"), F.col("qe")).alias("cos_sim"),
+            _cosine_spark("embedding", "qe").alias("cos_sim"),
         )
     )
     per_level = scored.select(
@@ -1749,7 +1768,7 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = (
         emb.crossJoin(F.broadcast(q))
-        .select("vec_id", _cosine_spark(F.col("embedding"), F.col("qe")).alias("cs"))
+        .select("vec_id", _cosine_spark("embedding", "qe").alias("cs"))
         .orderBy(F.desc("cs"), "vec_id")
         .limit(ANN_K)
         .select("vec_id", F.lit(1).alias("hit"))
@@ -2640,14 +2659,6 @@ def _qdot_chain_duck(a: str, b: str) -> str:
     return " + ".join(f"{a}[{k+1}] * {b}[{k+1}]" for k in range(EMB_DIM))
 
 
-def _qdot_chain_spark(a, b):
-    total = None
-    for k in range(EMB_DIM):
-        term = F.element_at(a, k + 1) * F.element_at(b, k + 1)
-        total = term if total is None else total + term
-    return total
-
-
 # shared SQ8 quantization, one definition for every quantized operator:
 # codes floor(x*127/maxabs) as BIGINT, all-zero codes for zero vectors.
 _QZ_DUCK_CTE = """
@@ -2722,7 +2733,7 @@ def embedding_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ma").alias("maxabs"),
             F.aggregate("q8", F.lit(0).cast("bigint"), lambda a, x: a + x)
             .alias("sum_q8"),
-            _qdot_chain_spark(F.col("q8"), F.col("qq")).cast("bigint").alias("qdot"),
+            F.expr(_vec_sum_sql("q8", "qq", _QDOT)).alias("qdot"),
         )
         .orderBy(F.desc("qdot"), "vec_id")
         .limit(10)
@@ -3277,15 +3288,6 @@ def _sqdist_chain_duck(a: str, b: str) -> str:
     )
 
 
-def _sqdist_chain_spark(a, b):
-    total = None
-    for k in range(EMB_DIM):
-        d = F.element_at(a, k + 1) - F.element_at(b, k + 1)
-        term = d * d
-        total = term if total is None else total + term
-    return total
-
-
 def _kmeans_duck_ctes() -> str:
     """CTE body c0..r2: init centroids, assign, update (trunc mean,
     empty clusters keep theirs), reassign — shared by the k-means
@@ -3336,7 +3338,7 @@ def _kmeans_assign(qz: DataFrame, cents: DataFrame, fields: list) -> DataFrame:
     ...))) — a MAP-SIDE-COMBINABLE aggregate (a row_number window would
     shuffle all K candidate rows per vector; min-struct shuffles one)."""
     j = qz.crossJoin(F.broadcast(cents)).withColumn(
-        "dist", _sqdist_chain_spark(F.col("q8"), F.col("cent")).cast("bigint")
+        "dist", F.expr(_vec_sum_sql("q8", "cent", _SQDIST))
     )
     m = j.groupBy("vec_id").agg(
         F.min(F.struct("dist", "cluster", "q8")).alias("m")
@@ -3385,23 +3387,15 @@ def _kmeans_c1(qz: DataFrame) -> DataFrame:
         F.col("vec_id").alias("cluster"), F.col("q8").alias("cent")
     )
     a1 = _kmeans_assign(qz, c0, ["cluster", "q8"])
+    dims = range(1, EMB_DIM + 1)
     sums = a1.groupBy("cluster").agg(
         F.count("*").cast("bigint").alias("cnt"),
-        *[
-            F.sum(F.element_at("q8", k + 1)).cast("bigint").alias(f"s{k+1}")
-            for k in range(EMB_DIM)
-        ],
+        *[F.expr(f"CAST(sum(element_at(q8, {k})) AS BIGINT) AS s{k}") for k in dims],
     )
-    trunc_mean = F.array(
-        *[
-            F.expr(f"s{k+1} DIV cnt").cast("bigint")
-            for k in range(EMB_DIM)
-        ]
-    )
+    trunc_mean = ", ".join(f"CAST(s{k} DIV cnt AS BIGINT)" for k in dims)
     return c0.join(F.broadcast(sums), "cluster", "left").select(
         "cluster",
-        F.when(F.col("cnt").isNull(), F.col("cent"))
-        .otherwise(trunc_mean)
+        F.expr(f"CASE WHEN cnt IS NULL THEN cent ELSE array({trunc_mean}) END")
         .alias("cent"),
     )
 
@@ -3425,6 +3419,7 @@ def _kmeans_c1(qz: DataFrame) -> DataFrame:
 PQ_M = 8    # subspaces
 PQ_SUB = 8  # dims per subspace (PQ_M * PQ_SUB == EMB_DIM)
 PQ_K = 16   # centroids per subspace -> 4-bit codes
+_PQ_OFF = f"m * {PQ_SUB}"  # subspace m's offset into a code vector
 
 
 def _pq_sqdist8_duck(vec: str, off: str, cent: str) -> str:
@@ -3432,14 +3427,6 @@ def _pq_sqdist8_duck(vec: str, off: str, cent: str) -> str:
     1-based offset expression ``off`` and an 8-element centroid."""
     return " + ".join(
         f"({vec}[{off} + {k}] - {cent}[{k}]) * ({vec}[{off} + {k}] - {cent}[{k}])"
-        for k in range(1, PQ_SUB + 1)
-    )
-
-
-def _pq_sqdist8_spark(vec: str, off: str, cent: str) -> str:
-    return " + ".join(
-        f"(element_at({vec}, {off} + {k}) - element_at({cent}, {k}))"
-        f" * (element_at({vec}, {off} + {k}) - element_at({cent}, {k}))"
         for k in range(1, PQ_SUB + 1)
     )
 
@@ -3536,22 +3523,15 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centq = cent.crossJoin(F.broadcast(q)).select(
         "m", "c", "cent8",
-        F.expr(
-            f"CAST({_pq_sqdist8_spark('qq', 'm * ' + str(PQ_SUB), 'cent8')}"
-            " AS BIGINT)"
-        ).alias("qdist"),
+        F.expr(_vec_sum_sql("qq", "cent8", _SQDIST, PQ_SUB, _PQ_OFF)).alias("qdist"),
     )
     ex = qz.crossJoin(F.broadcast(q)).select(
         "vec_id", "q8",
-        _sqdist_chain_spark(F.col("q8"), F.col("qq"))
-        .cast("bigint").alias("exact_dist"),
+        F.expr(_vec_sum_sql("q8", "qq", _SQDIST)).alias("exact_dist"),
     )
     enc = ex.crossJoin(F.broadcast(ms)).join(F.broadcast(centq), "m").select(
         "vec_id", "exact_dist", "m", "c", "qdist",
-        F.expr(
-            f"CAST({_pq_sqdist8_spark('q8', 'm * ' + str(PQ_SUB), 'cent8')}"
-            " AS BIGINT)"
-        ).alias("dist"),
+        F.expr(_vec_sum_sql("q8", "cent8", _SQDIST, PQ_SUB, _PQ_OFF)).alias("dist"),
     )
     codes = (
         enc.groupBy("vec_id", "exact_dist", "m")
@@ -3645,13 +3625,12 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one cached quantize pass + one assignment pass + a literal-
     coefficient dot projection — no repeated train lineage (the first
     version recomputed _kmeans_c1 three times through the probe/assign/
-    recall branches and spent 3-4x the wall on replanned 64-term
-    chains; measured 21.6s -> ~7s cold at sf0.01).  The fine search
-    touches only the probed clusters' members (at scale the assignment
-    table is written bucketed by cluster, so that filter is a
-    partition-pruned scan, and the qz persist below is replaced by
-    that written table); top-k and the exhaustive baseline are
-    TakeOrderedAndProject."""
+    recall branches, 3-4x the wall; measured 21.6s -> ~7s cold at
+    sf0.01).  The fine search touches only the probed clusters'
+    members (at scale the assignment table is written bucketed by
+    cluster, so that filter is a partition-pruned scan, and the qz
+    persist below is replaced by that written table); top-k and the
+    exhaustive baseline are TakeOrderedAndProject."""
     (emb,) = load(spark, sf_dir, "embeddings")
     qz = quantized_codes(_spread(emb)).select("vec_id", "q8").persist()
     c1 = _kmeans_c1(qz)
@@ -3671,24 +3650,19 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persisted: the fine/topk subtree is referenced by BOTH the recall
     # aggregate and the final projection — without the cache the
-    # assignment crossJoin (and its 64-term codegen chains) replans and
-    # recomputes per reference (measured 10.7s -> ~7s warm at sf0.1).
+    # assignment crossJoin (K distance chains per vector) recomputes
+    # per reference (measured 10.7s -> ~7s warm at sf0.1).
     # |asg| = one narrow row per vector, far smaller than the corpus.
     asg = _kmeans_assign(qz, cents_df, ["cluster", "q8"]).persist()
 
-    def _lit_dot(col):
-        total = None
-        for k, c in enumerate(qv):
-            term = F.element_at(col, k + 1) * F.lit(int(c))
-            total = term if total is None else total + term
-        return total
+    qdot = F.expr(_vec_sum_sql("q8", qv, _QDOT))
 
     fine = asg.where(F.col("cluster").isin(*probe_ids)).select(
-        "vec_id", "cluster", _lit_dot(F.col("q8")).cast("bigint").alias("qdot")
+        "vec_id", "cluster", qdot.alias("qdot")
     )
     topk = fine.orderBy(F.desc("qdot"), "vec_id").limit(IVF_KM_K).persist()
     exact = (
-        qz.select("vec_id", _lit_dot(F.col("q8")).cast("bigint").alias("qd"))
+        qz.select("vec_id", qdot.alias("qd"))
         .orderBy(F.desc("qd"), "vec_id")
         .limit(IVF_KM_K)
         .select("vec_id", F.lit(1).alias("hit"))
@@ -3835,17 +3809,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pcentq = pcent.crossJoin(F.broadcast(q)).select(
         "m", "c", "cent8",
-        F.expr(
-            f"CAST({_pq_sqdist8_spark('qq', 'm * ' + str(PQ_SUB), 'cent8')}"
-            " AS BIGINT)"
-        ).alias("qdist"),
+        F.expr(_vec_sum_sql("qq", "cent8", _SQDIST, PQ_SUB, _PQ_OFF)).alias("qdist"),
     )
     enc = mem.crossJoin(F.broadcast(ms)).join(F.broadcast(pcentq), "m").select(
         "vec_id", "cluster", "m", "c", "qdist",
-        F.expr(
-            f"CAST({_pq_sqdist8_spark('q8', 'm * ' + str(PQ_SUB), 'cent8')}"
-            " AS BIGINT)"
-        ).alias("dist"),
+        F.expr(_vec_sum_sql("q8", "cent8", _SQDIST, PQ_SUB, _PQ_OFF)).alias("dist"),
     )
     return _ivfpq_rerank(qz, _ivfpq_encode_agg(enc))
 
@@ -3904,8 +3872,7 @@ def _ivfpq_rerank(qz: DataFrame, short: DataFrame) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id", "cluster", "pq_code", "adc_dist",
-            _sqdist_chain_spark(F.col("q8"), F.col("qq"))
-            .cast("bigint").alias("exact_dist"),
+            F.expr(_vec_sum_sql("q8", "qq", _SQDIST)).alias("exact_dist"),
         )
     )
     final = exre.orderBy("exact_dist", "vec_id").limit(IVFPQ_TOPK).persist()
@@ -3913,8 +3880,7 @@ def _ivfpq_rerank(qz: DataFrame, short: DataFrame) -> DataFrame:
         qz.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            _sqdist_chain_spark(F.col("q8"), F.col("qq"))
-            .cast("bigint").alias("qd"),
+            F.expr(_vec_sum_sql("q8", "qq", _SQDIST)).alias("qd"),
         )
         .orderBy("qd", "vec_id")
         .limit(IVFPQ_TOPK)
@@ -4071,17 +4037,11 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pcentq = pcent.crossJoin(F.broadcast(qres)).select(
         "cluster", "m", "c", "cent8",
-        F.expr(
-            f"CAST({_pq_sqdist8_spark('qr', 'm * ' + str(PQ_SUB), 'cent8')}"
-            " AS BIGINT)"
-        ).alias("qdist"),
+        F.expr(_vec_sum_sql("qr", "cent8", _SQDIST, PQ_SUB, _PQ_OFF)).alias("qdist"),
     )
     enc = mem.join(F.broadcast(pcentq), "cluster").select(
         "vec_id", "cluster", "m", "c", "qdist",
-        F.expr(
-            f"CAST({_pq_sqdist8_spark('r8', 'm * ' + str(PQ_SUB), 'cent8')}"
-            " AS BIGINT)"
-        ).alias("dist"),
+        F.expr(_vec_sum_sql("r8", "cent8", _SQDIST, PQ_SUB, _PQ_OFF)).alias("dist"),
     )
     return _ivfpq_rerank(qz, _ivfpq_encode_agg(enc))
 

@@ -1,5 +1,7 @@
 import os
 import sys
+import threading
+import types
 
 import pytest
 
@@ -13,3 +15,26 @@ def spark():
     s = get_spark("ocr-gang-tests", cpus=4)
     yield s
     s.stop()
+
+
+@pytest.fixture()
+def py4j_round_trips(monkeypatch):
+    """Counter of the Python -> JVM py4j round trips the test's thread
+    makes: each ``ClientServerConnection.send_command`` call from it adds
+    one to ``.n``.  py4j's own thread that releases garbage JVM objects
+    is not counted, since when it runs depends on the garbage earlier
+    tests left.  Request it after ``spark`` so session start is not
+    counted."""
+    from py4j.clientserver import ClientServerConnection
+
+    counter = types.SimpleNamespace(n=0)
+    send = ClientServerConnection.send_command
+    owner = threading.get_ident()
+
+    def counted(self, *args, **kwargs):
+        if threading.get_ident() == owner:
+            counter.n += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    return counter

@@ -96,6 +96,42 @@ def test_oversized_fragmented_partition_compacts_to_file_budget(spark, fragmente
     assert rows_of(spark, fragmented) == before_rows
 
 
+def test_compaction_lists_only_picked_parts(spark, tmp_path):
+    """Compacting 3 fragmented parts of a 40-part table reads those 3
+    part dirs: no stage of the call has a task per part dir, as the
+    whole-table listing job (one task per dir past 32 dirs) had."""
+    out = str(tmp_path / "wide")
+    n_dirs, picked = 40, [0, 1, 2]
+    spark.range(n_dirs * 10).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % n_dirs).cast("int").alias("part_id"),
+    ).coalesce(1).write.partitionBy("part_id").parquet(out)
+    spark.range(60).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % len(picked)).cast("int").alias("part_id"),
+    ).repartition(4).write.mode("append").partitionBy("part_id").parquet(out)
+    stats = _part_file_stats(out)
+    assert len(stats) == n_dirs
+    assert sorted(p for p, (n, _b) in stats.items() if n > 1) == picked
+
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-3-of-40", "compact-3-of-40")
+    try:
+        res = compact_output(spark, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.n_parts_compacted == len(picked)
+    assert res.n_rows == len(picked) * 10 + 60
+    tracker = sc.statusTracker()
+    stage_tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup("compact-3-of-40")
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    ]
+    assert stage_tasks and max(stage_tasks) < n_dirs - len(picked), stage_tasks
+
+
 def test_clean_orphans_removes_stale_partitions_only(spark, fragmented):
     import os
     import shutil

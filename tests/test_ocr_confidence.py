@@ -29,6 +29,7 @@ from ocr_gang_spark.synth import (
     OCR_NOISE_EVERY,
     inject_scan_noise,
     inject_scan_noise_rgb,
+    is_degraded_ref,
 )
 
 
@@ -84,6 +85,19 @@ def test_noise_injection_is_deterministic():
     b = inject_scan_noise("m42-doc-00000005-1", bw)
     assert np.array_equal(a, b)
     assert not np.array_equal(a, bw)
+
+
+def test_degraded_slice_is_synth_refs_only():
+    # synth refs: every OCR_NOISE_EVERY-th document, any seed / span
+    assert is_degraded_ref("m42-doc-00000005-1")
+    assert is_degraded_ref("m7-doc-00000010-0")
+    assert is_degraded_ref("m3-doc-123000005-12")
+    assert not is_degraded_ref("m42-doc-00000007-1")
+    assert not is_degraded_ref("m42-doc-00000011-0")
+    # any other ref is never degraded, and never raises
+    for ref in ["s3://bucket/img.png", "img-7", "scan-page-a-1", "", "doc-00000005-1",
+                "m42-doc-0005-1", "m42-doc-00000005-x", "xm42-doc-00000005-1"]:
+        assert not is_degraded_ref(ref), ref
 
 
 def test_rgb_noise_commutes_with_binarize():

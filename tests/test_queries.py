@@ -40,3 +40,12 @@ def test_query_matches_duckdb(spark, duck, name):
 def test_rows_only_queries_run(spark, name):
     df = ALL[name](spark, SF_DIR)
     assert df.count() >= 0 and len(df.schema.fields) > 0
+
+
+@pytest.mark.parametrize("name", ["embedding_topk_cosine", "ann_ivf_multiprobe_topk"])
+def test_vector_queries_build_in_few_round_trips(spark, py4j_round_trips, name):
+    """The 64-term vector chains reach the JVM as SQL text, one py4j
+    round trip per expression: built one Column node per call, these
+    two queries took about 11,000 and 33,000 round trips."""
+    ALL[name](spark, SF_DIR)
+    assert py4j_round_trips.n <= 1500
