@@ -4,7 +4,10 @@
 Extraction -> OCR-confidence gate -> interleaved training-text render
 (<img:ref> + OCR text) -> multimodal sequence packing -> partitioned
 shards with a done-part ledger (see ocr_gang_spark/mm_curation.py for
-the three-stage design and its resume semantics).
+the three-stage design and its resume semantics).  The synth and
+testdata modes store every synth.OCR_NOISE_EVERY-th document's pages as
+degraded scans (synth.blob_for_degraded_ref), so the gate has a known
+slice to reject; parquet mode reads the blobs as given.
 
 Deploy exactly like the extraction job:
 
@@ -60,6 +63,7 @@ def main() -> None:
 
     from ocr_gang_spark.mm_curation import run_mm_curation
     from ocr_gang_spark.synth import (
+        blob_for_degraded_ref,
         spans_from_testdata,
         synth_documents,
         synth_media,
@@ -68,10 +72,10 @@ def main() -> None:
     if args.mode == "synth":
         docs = synth_documents(spark, args.n_docs, seed=args.seed,
                                skew_frac=args.skew_frac)
-        media = synth_media(spark, docs)
+        media = synth_media(spark, docs, blob_fn=blob_for_degraded_ref)
     elif args.mode == "testdata":
         docs = spans_from_testdata(spark, args.sf_dir, seed=args.seed)
-        media = synth_media(spark, docs)
+        media = synth_media(spark, docs, blob_fn=blob_for_degraded_ref)
     else:
         docs = spark.read.parquet(args.input_docs)
         media = spark.read.parquet(args.input_media)

@@ -170,24 +170,25 @@ def _check_run_manifest(
     different value would silently mix e.g. deskewed and non-deskewed
     parts in one output directory, so refuse instead.
 
-    ``defaults`` maps keys ADDED to the manifest after older runs were
-    created to the value those runs implicitly had (a flag that did not
-    exist behaved as its default; a versioned rule was at its previous
-    version).  A key absent from an old manifest compares against that
-    implied value — so resuming a pre-flag checkpoint with default
-    options proceeds, while resuming across a behavior change still
-    refuses (code-review fix: the bare prev.get(k) made EVERY old
-    checkpoint refuse, even when the resumed run was byte-identical)."""
+    ``defaults`` maps each key added to or dropped from the manifest to
+    the value runs without it had (a flag that did not exist behaved as
+    its default; a versioned rule was at its previous version; a removed
+    option left only its default behavior).  One rule covers every key
+    the manifest stores or the run passes: a key missing on either side
+    takes its ``defaults`` value, then both sides must agree.  So a
+    pre-flag checkpoint resumes under default options, while a resume
+    across a behavior change, or from a checkpoint written with a
+    removed option switched on, refuses."""
     defaults = defaults or {}
     path = os.path.join(checkpoint_dir, MANIFEST_NAME)
     if os.path.exists(path):
         with open(path) as f:
             prev = json.load(f)
-        diff = {
-            k: (prev.get(k, defaults.get(k)), v)
-            for k, v in opts.items()
-            if prev.get(k, defaults.get(k)) != v
-        }
+        diff = {}
+        for k in {**prev, **opts}:
+            old, new = prev.get(k, defaults.get(k)), opts.get(k, defaults.get(k))
+            if old != new:
+                diff[k] = (old, new)
         if diff:
             raise ValueError(
                 f"refusing to resume: run manifest {path} pins "
@@ -222,7 +223,6 @@ def run_extraction(
     deskew: bool = False,
     on_error: str = "fail",
     with_margins: bool = False,
-    degrade_slice: bool = False,
 ) -> RunResult:
     """One (possibly resuming) extraction run.
 
@@ -236,15 +236,15 @@ def run_extraction(
     # from a different n_parts (full reprocess), but dynamic partition
     # overwrite only replaces the NEW part_id dirs — stale dirs from the
     # old partitioning would silently duplicate documents in the output;
-    # on_error changes what rows corrupt blobs produce; margin/degrade
-    # flags change the output schema and the OCR input respectively
+    # on_error changes what rows corrupt blobs produce; with_margins
+    # changes the output schema
     _check_run_manifest(
         checkpoint_dir,
         {"deskew": bool(deskew), "n_parts": int(n_parts),
-         "on_error": str(on_error), "with_margins": bool(with_margins),
-         "degrade_slice": bool(degrade_slice)},
-        # keys added after the first manifests shipped: a checkpoint
-        # from before a flag existed behaved as that flag's default
+         "on_error": str(on_error), "with_margins": bool(with_margins)},
+        # a checkpoint from before a flag existed behaved as its
+        # default; the last key is a removed noise-injection option
+        # (degraded scans are input now): only runs without it resume
         defaults={"on_error": "fail", "with_margins": False,
                   "degrade_slice": False},
     )
@@ -263,7 +263,6 @@ def run_extraction(
     extracted = extract_documents(
         remaining.drop("part_id"), media, weights_bc, deskew=deskew,
         on_error=on_error, with_margins=with_margins,
-        degrade_slice=degrade_slice,
     )
     # per-doc span stats become plain columns so the lineage pass can
     # read 3 small columns instead of re-exploding the spans arrays

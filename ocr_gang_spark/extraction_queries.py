@@ -25,7 +25,7 @@ from .pipeline import (
     rendered_interleaved_expr,
 )
 from .queries import load, register
-from .synth import spans_from_testdata, synth_media
+from .synth import blob_for_degraded_ref, spans_from_testdata, synth_media
 
 _FIXTURES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures"
@@ -183,48 +183,42 @@ def ocr_confidence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — low-margin pages are routed to 'review' instead.
 
     Inject-then-detect honesty (like lang-ID/deskew): every
-    synth.OCR_NOISE_EVERY-th document's pages are deterministically
-    degraded (salt-and-pepper at OCR_NOISE_RATE) BEFORE the margin
-    pass, and the test asserts the router flags exactly the degraded
-    slice.  Scale shape: per-blob mapInPandas (no shuffle), NN forward
-    batched per Arrow batch and deduplicated by matrix content —
-    identical plan to the flagship's media branch."""
+    synth.OCR_NOISE_EVERY-th document's pages are stored degraded
+    (salt-and-pepper at OCR_NOISE_RATE, synth.blob_for_degraded_ref),
+    and the test asserts the router flags exactly the degraded slice.
+    Scale shape: per-blob mapInPandas (no shuffle), NN forward batched
+    per Arrow batch and deduplicated by matrix content — identical plan
+    to the flagship's media branch."""
     docs = spans_from_testdata(spark, sf_dir)
-    media = synth_media(spark, docs)
+    media = synth_media(spark, docs, blob_fn=blob_for_degraded_ref)
     return confidence_stats_from(media, broadcast_weights(spark))
 
 
 def confidence_stats_from(media: DataFrame, weights_bc) -> DataFrame:
     """DataFrame-level confidence routing over (media_ref, bytes) —
-    shared with the streaming variant (streaming.stream_confidence)."""
+    shared with the streaming variant (streaming.stream_confidence).
+    Scores each blob as stored; ``degraded`` only labels the synth
+    degraded slice (synth.is_degraded_ref)."""
     from .kernels.bmp import decode_media_blob
     from .kernels.image_ops import binarize
     from .kernels.ocr import ocr_pages_to_text_margins
-    from .synth import inject_scan_noise, is_degraded_ref
+    from .synth import is_degraded_ref
 
     def stats(batches):
         w = weights_bc.value
         for pdf in batches:
             refs = [str(r) for r in pdf["media_ref"]]
-            pages = []
-            flags = []
-            for ref, blob in zip(refs, pdf["bytes"]):
-                bw = binarize(decode_media_blob(bytes(blob)))
-                degraded = is_degraded_ref(ref)
-                if degraded:
-                    bw = inject_scan_noise(ref, bw)
-                pages.append(bw)
-                flags.append(degraded)
+            pages = [binarize(decode_media_blob(bytes(b))) for b in pdf["bytes"]]
             rows = []
-            for ref, degraded, (n, mn, sm) in zip(
-                refs, flags, ocr_pages_to_text_margins(pages, w)[1]
+            for ref, (n, mn, sm) in zip(
+                refs, ocr_pages_to_text_margins(pages, w)[1]
             ):
                 decision = (
                     "review"
                     if mn is not None and mn < OCR_REVIEW_PPM
                     else "accept"
                 )
-                rows.append((ref, degraded, n, mn, sm, decision))
+                rows.append((ref, is_degraded_ref(ref), n, mn, sm, decision))
             yield pd.DataFrame(
                 rows,
                 columns=["media_ref", "degraded", "n_glyphs",

@@ -22,14 +22,15 @@ Three stages, each with the resume discipline its data size demands:
 Single-pass confidence: the one OCR walk
 (kernels/ocr.ocr_pages_to_text_margins) computes every page's margins
 from the SAME NN forward as its text.  Stage E runs the extraction
-pipeline with ``with_margins=True``, which emits them as a column, and
-``degrade_slice=True`` (the inject-then-detect demo input: every
-OCR_NOISE_EVERY-th document's pages are deterministically degraded
-BEFORE OCR, as degraded scans arrive degraded in production).  Stage D
-then reads the per-doc ``doc_min_margin_ppm`` column straight off the
-extracted table — no second decode/NN pass over the blobs.  The
-exact-match flagship sets neither flag, so its output schema and the
-reference-equality fixtures are untouched.
+pipeline with ``with_margins=True``, which emits them as a column;
+Stage D then reads the per-doc ``doc_min_margin_ppm`` column straight
+off the extracted table — no second decode/NN pass over the blobs.
+The job scores the pages it is given: a degraded scan arrives degraded
+in the media table (the synth corpus writes its degraded slice as
+blobs, synth.blob_for_degraded_ref), so the gate and the two-pass
+confidence router (extraction_queries.ocr_confidence_stats) score the
+same pixels.  The exact-match flagship does not set ``with_margins``,
+so its output schema and the reference-equality fixtures are untouched.
 """
 
 from __future__ import annotations
@@ -192,13 +193,13 @@ def run_mm_curation(
     t0 = time.time()
 
     # Stage E — resumable extraction (its own ledger under extract_cp/)
-    # with the single-pass margin column and the degraded demo slice
+    # with the single-pass margin column
     run_extraction(
         spark, docs, media,
         os.path.join(workdir, "extracted"),
         os.path.join(workdir, "extract_cp"),
         n_parts=n_parts, run_id=f"{run_id}-extract", weights_bc=weights_bc,
-        with_margins=True, degrade_slice=True, on_error=on_error,
+        with_margins=True, on_error=on_error,
     )
     extracted = spark.read.parquet(os.path.join(workdir, "extracted")).select(
         "doc_id", "spans", "doc_min_margin_ppm"

@@ -178,7 +178,6 @@ def extract_media_spans(
     deskew: bool = False,
     on_error: str = "fail",
     with_margins: bool = False,
-    degrade_slice: bool = False,
 ) -> DataFrame:
     """kind='media' branch: resolve blobs, OCR them in Arrow batches.
 
@@ -209,10 +208,6 @@ def extract_media_spans(
     ``with_margins=True`` only decides whether the per-page margin floor
     is emitted as an extra ``min_margin_ppm`` column — the output schema
     the multimodal curation job reads; the text is the same either way.
-    ``degrade_slice=True`` applies the deterministic synth degradation
-    (inject_scan_noise_rgb) to every OCR_NOISE_EVERY-th document's pages
-    AFTER decode — the inject-then-detect demo input; both flags are off
-    on the exact-match flagship path.
     """
     if on_error not in ("fail", "quarantine"):
         raise ValueError(f"on_error must be 'fail' or 'quarantine', got {on_error!r}")
@@ -227,8 +222,6 @@ def extract_media_spans(
 
     def ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         _drop_zip_finders()
-        from .synth import inject_scan_noise_rgb, is_degraded_ref
-
         w = weights_bc.value
         quarantine = on_error == "quarantine"
         for pdf in batches:
@@ -254,10 +247,6 @@ def extract_media_spans(
                     continue
                 try:
                     page = decode_media_blob(bytes(b))
-                    if degrade_slice and is_degraded_ref(str(pdf["media_ref"].iloc[i])):
-                        page = inject_scan_noise_rgb(
-                            str(pdf["media_ref"].iloc[i]), page
-                        )
                     if deskew:
                         page = deskew_page(page)
                 except Exception as ex:
@@ -371,7 +360,6 @@ def extract_documents(
     deskew: bool = False,
     on_error: str = "fail",
     with_margins: bool = False,
-    degrade_slice: bool = False,
 ) -> DataFrame:
     """Full pipeline: documents + media -> documents with extracted spans.
 
@@ -385,9 +373,10 @@ def extract_documents(
     doc's media spans; NULL only for genuinely media-free docs —
     quarantined kind='error' spans carry margin 0, so a doc whose
     every image failed routes to review, never auto-accept) aggregated
-    in the SAME groupBy as the span reassembly — the single-pass confidence gate
-    the multimodal curation job reads; ``degrade_slice`` is its
-    inject-then-detect demo input (see extract_media_spans)."""
+    in the SAME groupBy as the span reassembly — the single-pass
+    confidence gate the multimodal curation job reads.  Every option
+    reads the blobs as given: a degraded scan is degraded in the media
+    table (e.g. synth.blob_for_degraded_ref), never by the pipeline."""
     if weights_bc is None:
         spark = spark or docs.sparkSession
         weights_bc = broadcast_weights(spark)
@@ -395,8 +384,7 @@ def extract_documents(
     text_out = extract_text_spans(spans)
     media_out = extract_media_spans(spans, media, weights_bc, deskew=deskew,
                                     on_error=on_error,
-                                    with_margins=with_margins,
-                                    degrade_slice=degrade_slice)
+                                    with_margins=with_margins)
     # empty/NULL-spans docs ride through as their explode_outer
     # placeholder row (kind NULL) so they keep an output row with
     # spans=[] — the text/media branches filter on kind and would

@@ -670,10 +670,10 @@ def stream_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .extraction_queries import confidence_stats_from
     from .pipeline import broadcast_weights
-    from .synth import spans_from_testdata, synth_media
+    from .synth import blob_for_degraded_ref, spans_from_testdata, synth_media
 
     docs = spans_from_testdata(spark, sf_dir)
-    media = synth_media(spark, docs)
+    media = synth_media(spark, docs, blob_fn=blob_for_degraded_ref)
     weights_bc = broadcast_weights(spark)
     work = _stream_work_dir("sconf", sf_dir)
     in_dir = _os.path.join(work, "in")

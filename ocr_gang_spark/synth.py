@@ -267,10 +267,10 @@ def blob_for_dedup_ref(ref: str) -> bytes:
 
 # Deterministic scan degradation (inject-then-detect, same honesty
 # pattern as lang-ID and deskew): every OCR_NOISE_EVERY-th document's
-# pages get salt-and-pepper flips at OCR_NOISE_RATE, so the confidence
-# router (extraction_queries.ocr_confidence_stats) has real degraded
-# pages to flag.  Measured separation on this corpus: clean pages'
-# min softmax margin >= ~0.998, degraded <= ~0.04.
+# pages are stored degraded — salt-and-pepper flips at OCR_NOISE_RATE
+# on the rendered page, then the ref's own codec (blob_for_degraded_ref)
+# — so the confidence router and the mm gate read real degraded scans
+# as input; no pipeline stage injects anything.
 OCR_NOISE_EVERY = 5
 OCR_NOISE_RATE = 0.05
 
@@ -285,28 +285,25 @@ def is_degraded_ref(ref: str) -> bool:
     return m is not None and int(m.group(1)) % OCR_NOISE_EVERY == 0
 
 
-def inject_scan_noise(ref: str, bw: np.ndarray) -> np.ndarray:
-    """Flip OCR_NOISE_RATE of the binarized page's pixels, seeded by
-    ref (pure function: fixture generation replays it exactly)."""
-    rng = _rng("scan-noise", ref)
-    flips = rng.random(bw.shape) < OCR_NOISE_RATE
-    out = bw.copy()
-    out[flips] = 255 - out[flips]
-    return out
-
-
 def inject_scan_noise_rgb(ref: str, rgb: np.ndarray) -> np.ndarray:
-    """RGB-domain twin of inject_scan_noise: SAME seeded (h, w) flip
-    mask, each chosen pixel inverted across channels.  On the pure
-    black/white atlas pages binarize(inject_rgb(page)) ==
-    inject_bw(binarize(page)) pixel-for-pixel (pinned by test), so the
-    single-pass extraction margin path sees the exact degradation the
-    two-pass confidence router sees."""
+    """Invert OCR_NOISE_RATE of the page's pixels across channels, at a
+    (h, w) mask seeded by ref (pure function: fixture generation
+    replays it exactly)."""
     rng = _rng("scan-noise", ref)
     flips = rng.random(rgb.shape[:2]) < OCR_NOISE_RATE
     out = rgb.copy()
     out[flips] = 255 - out[flips]
     return out
+
+
+def blob_for_degraded_ref(ref: str) -> bytes:
+    """blob_for_ref with the scan degradation applied: degraded refs
+    encode their noisy page under the ref's own codec, every other ref
+    is byte-identical to blob_for_ref."""
+    rgb = page_for_ref(ref)[1]
+    if is_degraded_ref(ref):
+        rgb = inject_scan_noise_rgb(ref, rgb)
+    return _encode_for_ref(rgb, ref)
 
 
 # the ONE boilerplate-wrap template (round-4 review: three verbatim

@@ -295,19 +295,16 @@ def _brute_margin_ppm(mat: np.ndarray, w) -> int:
 
 
 def expected_confidence_rows_for(sf_dir: str, weights):
-    """Offline run of the confidence-routing pipeline (binarize ->
-    optional injected degradation -> ocr_pages_to_text_margins stats ->
-    decision); every CROSSCHECK_EVERY-th document's pages get every
-    glyph margin re-derived via the dense-conv/naive-softmax brute path."""
+    """Offline run of the confidence-routing pipeline over the degraded
+    corpus variant (blob_for_degraded_ref -> decode -> binarize ->
+    ocr_pages_to_text_margins stats -> decision); every
+    CROSSCHECK_EVERY-th document's pages get every glyph margin
+    re-derived via the dense-conv/naive-softmax brute path."""
     from ocr_gang_spark.extraction_queries import OCR_REVIEW_PPM
     from ocr_gang_spark.kernels.bmp import decode_media_blob
     from ocr_gang_spark.kernels.image_ops import binarize as bz
     from ocr_gang_spark.kernels.ocr import ocr_pages_to_text_margins
-    from ocr_gang_spark.synth import (
-        blob_for_ref,
-        inject_scan_noise,
-        is_degraded_ref,
-    )
+    from ocr_gang_spark.synth import blob_for_degraded_ref, is_degraded_ref
 
     key = corpus_key_of(sf_dir)
     docs = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id"])
@@ -316,15 +313,12 @@ def expected_confidence_rows_for(sf_dir: str, weights):
     for did in docs.column("doc_id").to_pylist():
         for i in range(1, did % MEDIA_PER_DOC + 2):
             ref = f"m{SEED}-doc-{did:08d}-{i}"
-            bw = bz(decode_media_blob(blob_for_ref(ref)))
-            degraded = is_degraded_ref(ref)
-            if degraded:
-                bw = inject_scan_noise(ref, bw)
+            bw = bz(decode_media_blob(blob_for_degraded_ref(ref)))
             ((n, mn, sm),) = ocr_pages_to_text_margins([bw], weights)[1]
             decision = (
                 "review" if mn is not None and mn < OCR_REVIEW_PPM else "accept"
             )
-            rows.append((key, ref, degraded, n, mn, sm, decision))
+            rows.append((key, ref, is_degraded_ref(ref), n, mn, sm, decision))
             if did % CROSSCHECK_EVERY == 0:
                 from ocr_gang_spark.kernels.image_ops import segment_page
 

@@ -186,6 +186,37 @@ def test_manifest_missing_keys_compare_against_defaults(tmp_path):
         )
 
 
+@pytest.mark.parametrize("stored", [True, False, None])
+def test_removed_noise_option_resumes_only_when_off(spark, corpus, tmp_path, stored):
+    """run_extraction no longer takes a noise-injection option: a
+    checkpoint whose manifest recorded it switched on holds noisy parts
+    and must refuse, while one that recorded it off, or never had the
+    key, resumes as a no-op."""
+    import json
+
+    docs, media = corpus
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    bc = broadcast_weights(spark)
+    run_extraction(spark, docs, media, out, cp, n_parts=N_PARTS,
+                   run_id="r1", weights_bc=bc)
+    path = os.path.join(cp, MANIFEST_NAME)
+    with open(path) as f:
+        manifest = json.load(f)
+    assert "degrade_slice" not in manifest
+    if stored is not None:
+        manifest["degrade_slice"] = stored
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    if stored:
+        with pytest.raises(ValueError, match="degrade_slice=True"):
+            run_extraction(spark, docs, media, out, cp, n_parts=N_PARTS,
+                           run_id="r2", weights_bc=bc)
+    else:
+        r2 = run_extraction(spark, docs, media, out, cp, n_parts=N_PARTS,
+                            run_id="r2", weights_bc=bc)
+        assert r2.n_parts_processed == 0 and r2.n_docs == 0
+
+
 def test_done_part_ids_on_fresh_ledger_starts_no_job(spark, tmp_path):
     """A ledger dir holding only the run manifest (every fresh run) is
     answered from the listing: no Spark job.  Once the ledger holds a

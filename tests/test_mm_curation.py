@@ -1,12 +1,18 @@
-"""run_mm_curation end-to-end: the confidence gate rejects exactly the
-degraded slice, accepted docs ship with valid render + bin assignment,
+"""run_mm_curation end-to-end: over the degraded corpus variant the
+confidence gate rejects exactly the degraded slice, over clean blobs it
+rejects nothing, accepted docs ship with valid render + bin assignment,
 and the run resumes as a no-op."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_gang_spark.mm_curation import run_mm_curation
-from ocr_gang_spark.synth import OCR_NOISE_EVERY, spans_from_testdata, synth_media
+from ocr_gang_spark.synth import (
+    OCR_NOISE_EVERY,
+    blob_for_degraded_ref,
+    spans_from_testdata,
+    synth_media,
+)
 from ocr_gang_spark.textops import MM_PACK_BUDGET
 
 SF = "/root/testdata/sf0.001"
@@ -17,7 +23,7 @@ N_PARTS = 16
 def run(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("mmcur"))
     docs = spans_from_testdata(spark, SF)
-    media = synth_media(spark, docs)
+    media = synth_media(spark, docs, blob_fn=blob_for_degraded_ref)
     res = run_mm_curation(spark, docs, media, wd, n_parts=N_PARTS)
     return spark, wd, docs, media, res
 
@@ -36,6 +42,17 @@ def test_gate_rejects_exactly_the_degraded_slice(run):
         did = int(r.doc_id.split("-")[1])
         assert r.accept == (did % OCR_NOISE_EVERY != 0)
         assert (r.reason == "low_confidence") == (not r.accept)
+
+
+def test_clean_blobs_are_never_rejected(spark, tmp_path):
+    """The job scores the blobs it is given and injects nothing: over
+    the plain renderer's blobs, degraded-slice documents included,
+    every document is accepted."""
+    docs = spans_from_testdata(spark, SF).where(F.col("doc_id") < "doc-00000040")
+    media = synth_media(spark, docs)
+    res = run_mm_curation(spark, docs, media, str(tmp_path / "mmclean"), n_parts=4)
+    assert res.n_rejected == 0
+    assert res.n_docs_out == docs.count() == 40
 
 
 def test_shards_render_and_pack(run):

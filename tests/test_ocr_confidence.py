@@ -9,6 +9,7 @@ import pytest
 
 from ocr_gang_spark.atlas import page_for_ref, render_page
 from ocr_gang_spark.extraction_queries import OCR_REVIEW_PPM, ocr_confidence_stats
+from ocr_gang_spark.kernels.bmp import decode_media_blob
 from ocr_gang_spark.kernels.image_ops import binarize, segment_page
 from ocr_gang_spark.kernels.nn import (
     classify,
@@ -27,7 +28,8 @@ from ocr_gang_spark.kernels.ocr import (
 from ocr_gang_spark.pipeline import default_weights
 from ocr_gang_spark.synth import (
     OCR_NOISE_EVERY,
-    inject_scan_noise,
+    blob_for_degraded_ref,
+    blob_for_ref,
     inject_scan_noise_rgb,
     is_degraded_ref,
 )
@@ -80,11 +82,33 @@ def test_empty_page(weights):
 
 
 def test_noise_injection_is_deterministic():
-    bw = binarize(page_for_ref("m42-doc-00000005-1")[1])
-    a = inject_scan_noise("m42-doc-00000005-1", bw)
-    b = inject_scan_noise("m42-doc-00000005-1", bw)
+    rgb = page_for_ref("m42-doc-00000005-1")[1]
+    a = inject_scan_noise_rgb("m42-doc-00000005-1", rgb)
+    b = inject_scan_noise_rgb("m42-doc-00000005-1", rgb)
     assert np.array_equal(a, b)
-    assert not np.array_equal(a, bw)
+    assert not np.array_equal(a, rgb)
+    assert blob_for_degraded_ref("m42-doc-00000005-1") == blob_for_degraded_ref(
+        "m42-doc-00000005-1"
+    )
+
+
+# one degraded and one clean ref per codec of the synth format mix
+_CODEC_REFS = {
+    "zlib-bmp": ["m42-doc-00000000-1", "m42-doc-00000001-1"],
+    "png": ["m42-doc-00000010-1", "m42-doc-00000003-2"],
+    "jpeg": ["m42-doc-00000005-2", "m42-doc-00000027-2"],
+}
+
+
+@pytest.mark.parametrize("codec", sorted(_CODEC_REFS))
+def test_degraded_blob_differs_only_for_degraded_refs(codec):
+    degraded, clean = _CODEC_REFS[codec]
+    assert is_degraded_ref(degraded) and not is_degraded_ref(clean)
+    assert blob_for_degraded_ref(clean) == blob_for_ref(clean)
+    assert blob_for_degraded_ref(degraded) != blob_for_ref(degraded)
+    # the ref keeps its own codec: same leading magic bytes
+    for ref in (degraded, clean):
+        assert blob_for_degraded_ref(ref)[:2] == blob_for_ref(ref)[:2]
 
 
 def test_degraded_slice_is_synth_refs_only():
@@ -100,15 +124,27 @@ def test_degraded_slice_is_synth_refs_only():
         assert not is_degraded_ref(ref), ref
 
 
-def test_rgb_noise_commutes_with_binarize():
-    # the single-pass extraction path degrades in RGB before binarize;
-    # the two-pass router degrades the binarized page — same mask, same
-    # result, so both gates see the identical degraded input
-    for ref in ["m42-doc-00000005-1", "m42-doc-00000010-0"]:
-        _, rgb = page_for_ref(ref)
-        via_rgb = binarize(inject_scan_noise_rgb(ref, rgb))
-        via_bw = inject_scan_noise(ref, binarize(rgb))
-        assert np.array_equal(via_rgb, via_bw)
+def test_router_scores_the_stored_degraded_blob(spark, weights):
+    # the router injects nothing: its stats for a degraded ref are the
+    # OCR walk's stats on that ref's stored blob, every codec included
+    from ocr_gang_spark.extraction_queries import confidence_stats_from
+    from ocr_gang_spark.pipeline import broadcast_weights
+
+    refs = [d for d, _ in _CODEC_REFS.values()]
+    media = spark.createDataFrame(
+        [(r, blob_for_degraded_ref(r)) for r in refs],
+        "media_ref string, bytes binary",
+    )
+    got = {
+        r.media_ref: r
+        for r in confidence_stats_from(media, broadcast_weights(spark)).collect()
+    }
+    for ref in refs:
+        page = decode_media_blob(blob_for_degraded_ref(ref))
+        ((n, mn, sm),) = ocr_pages_to_text_margins([page], weights)[1]
+        r = got[ref]
+        assert r.degraded
+        assert (r.n_glyphs, r.min_margin_ppm, r.sum_margin_ppm) == (n, mn, sm)
 
 
 def _mixed_pages():
