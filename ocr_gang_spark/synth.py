@@ -269,8 +269,8 @@ def blob_for_dedup_ref(ref: str) -> bytes:
 # pattern as lang-ID and deskew): every OCR_NOISE_EVERY-th document's
 # pages are stored degraded — salt-and-pepper flips at OCR_NOISE_RATE
 # on the rendered page, then the ref's own codec (blob_for_degraded_ref)
-# — so the confidence router and the mm gate read real degraded scans
-# as input; no pipeline stage injects anything.
+# — so the confidence router and the mm gate read the same degraded
+# scans as input.
 OCR_NOISE_EVERY = 5
 OCR_NOISE_RATE = 0.05
 
